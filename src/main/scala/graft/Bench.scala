@@ -26,6 +26,11 @@ object Bench {
       .config("spark.cleaner.periodicGC.interval", "30s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // A failure never changes the output line beyond its "failed" list,
+    // but it must not vanish either: name it and its first line on stderr.
+    def report(what: String, e: Throwable): Unit =
+      System.err.println(s"graft.Bench: $what failed: " +
+        String.valueOf(e).linesIterator.nextOption().getOrElse(""))
     // warmup: JIT/codegen compile paths + parquet footers, outside timings
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -43,7 +48,7 @@ object Bench {
       graft.ops.Layout.prepareTimeTravel(spark, sfDir)
       graft.ops.Extended.prepareXml(spark, sfDir)
       graft.ops.Extended.prepareCsv(spark, sfDir)
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => report("fixture prep", e) }
     // Warm pass at the smallest SF: first-use costs (whole-stage-codegen
     // compilation, MLlib/streaming/ImageIO class loading) are JVM warmup,
     // not operator cost — the timed pass below measures operators on a
@@ -61,8 +66,8 @@ object Bench {
     if (warmDir.nonEmpty) {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => selected(n) }
-        .foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => }
+        .foreach { case (name, fn) =>
+        try fn(spark, warmDir).count() catch { case e: Throwable => report(s"warm $name", e) }
       }
       // release warm-pass localCheckpoint blocks + let the collector settle
       // so timed queries don't pay the warm pass's storage/GC debt
@@ -88,7 +93,8 @@ object Bench {
       .filter { case (n, _) => selected(n) }
       .map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable => report(s"timed $name", e); false }
       val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       sinceGc += 1

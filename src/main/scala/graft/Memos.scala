@@ -12,7 +12,8 @@ package graft
   * structural instead of per-cache-audit.
   *
   * The caches cleared here hold DERIVED driver-side state only (fitted
-  * coefficient vectors, an audit row list, a committed-table path);
+  * coefficient vectors, an audit row list, a committed-table path, the
+  * events `ts` physical type);
   * prepared on-disk FIXTURES (split-source copies, bucketed tables,
   * text/XML/CSV copies) are corpus preparation declared in Bench's
   * warmup block and are NOT reset — they are keyed per sfDir and
@@ -23,5 +24,6 @@ object Memos {
     ml.StreamScoring.resetMemo()
     ml.Scoring.resetMemo()
     ingest.IngestQueries.resetMemo()
+    streaming.StreamingOps.resetMemo()
   }
 }

@@ -61,18 +61,6 @@ object Tables {
     if (shouldFan(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
 
-  /** Keyed [[fanout]]: when the downstream stage aggregates/joins on
-    * `keys`, hash-repartitioning by those keys lets EnsureRequirements
-    * reuse the exchange — the degenerate scan is spread AND the
-    * aggregation's own shuffle disappears into it (one exchange total,
-    * same as the un-fanned plan, but with a parallel map side). Same
-    * scale-adaptive guards as [[fanout]].
-    */
-  def fanout(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
-    if (shouldFan(df))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
-    else df
-
   /** Fan out only when BOTH hold: the scan is degenerate (fewer
     * partitions than defaultParallelism — at production split counts
     * this alone makes fanout the identity) AND the input is big enough
@@ -100,9 +88,12 @@ object Tables {
     // sizes at/near defaultSizeInBytes (Long.MaxValue) mean UNKNOWN —
     // checkpointed/LogicalRDD inputs (e.g. q151's ~1.6k-row bucket
     // tables) report that sentinel; they already carry their creation
-    // parallelism, so never fan them on a meaningless estimate
-    df.rdd.getNumPartitions < sc.defaultParallelism &&
-      size >= minBytes && size < BigInt(Long.MaxValue) / 4
+    // parallelism, so never fan them on a meaningless estimate.
+    // The size gate goes FIRST: under AQE `.rdd` runs every upstream
+    // shuffle stage, so probing the partition count of a sub-threshold
+    // aggregated frame would execute it once just to leave it alone.
+    size >= minBytes && size < BigInt(Long.MaxValue) / 4 &&
+      df.rdd.getNumPartitions < sc.defaultParallelism
   }
 }
 

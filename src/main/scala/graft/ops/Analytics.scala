@@ -1127,11 +1127,7 @@ object Analytics extends QueryModule {
     // standard market-basket bound) — no corpus self-join, no second
     // distinct. The basket list is |orders| rows and feeds total/freq/
     // pairs from one materialization.
-    // keyed fanout: the broadcast probe + per-order set building
-    // otherwise run as ONE task on the one-row-group driver corpus
-    // (§2.5); hashing by l_orderkey lets the groupBy reuse the exchange
-    val sets = graft.Tables
-      .fanout(li.select("l_orderkey", "l_partkey"), col("l_orderkey"))
+    val sets = li.select("l_orderkey", "l_partkey")
       .join(broadcast(part.select("p_partkey", "p_brand")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_orderkey"))
@@ -1720,23 +1716,13 @@ object Analytics extends QueryModule {
     val scaled = li.select(col("l_returnflag").as("flag"),
       round(col("l_extendedprice") * 100).cast("long").as("v"),
       round(col("l_quantity")).cast("long").as("wt"))
-    // two-level cumulative weights: the distinct-value table can be
-    // corpus-sized (prices are near-unique), so a single per-flag window
-    // would serialize on one partition at scale. Instead: per-bucket
-    // weight totals prefix-sum in a TINY window (one row per bucket),
-    // and the within-bucket window partitions by (flag, bucket) — both
-    // levels distribute; cumw is identical to the flat form.
+    // two-level cumulative weights ([[Dist.prefixScan]], partitioned by
+    // flag): the distinct-value table can be corpus-sized (prices are
+    // near-unique), so a single per-flag window would serialize on one
+    // partition at scale; cumw is identical to the flat form.
     val byV = scaled.groupBy("flag", "v").agg(sum("wt").as("wv"))
-      .withColumn("bkt", (col("v") / 100000L).cast("long"))
-    val wIn = Window.partitionBy("flag", "bkt").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBkt = Window.partitionBy("flag").orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bktPrefix = byV.groupBy("flag", "bkt").agg(sum("wv").as("bw"))
-      .withColumn("prefix", coalesce(sum("bw").over(wBkt), lit(0L)))
-      .select("flag", "bkt", "prefix")
-    byV.join(bktPrefix, Seq("flag", "bkt"))
-      .withColumn("cumw", col("prefix") + sum("wv").over(wIn))
+    Dist.prefixScan(byV, (col("v") / 100000L).cast("long"), Seq(col("v")),
+        Seq(Dist.Scan(col("wv"), Dist.Sum, "cumw")), partition = Seq("flag"))
       .crossJoin(broadcast(scaled.groupBy("flag")
         .agg(sum("wt").as("totw")).withColumnRenamed("flag", "f")))
       .filter(col("flag") === col("f"))
@@ -1772,25 +1758,15 @@ object Analytics extends QueryModule {
   def spearmanCorr(li: DataFrame): DataFrame = {
     val base = li.select(round(col("l_quantity")).cast("long").as("x"),
       round(col("l_extendedprice") * 100).cast("long").as("y"))
-    // two-level ranking (same trick as weightedMedian): bucket prefix
-    // counts in a tiny window + within-bucket windows partitioned by
-    // bucket — the distinct-price table is corpus-sized, so a flat
-    // global window would serialize on one partition at scale. cum is
-    // identical to the flat form.
-    def ranks(c: String) = {
-      val byV = base.groupBy(c).agg(count(lit(1)).as("cnt"))
-        .withColumn("bkt", (col(c) / 100000L).cast("long"))
-      val wIn = Window.partitionBy("bkt").orderBy(col(c))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wBkt = Window.orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bktPrefix = byV.groupBy("bkt").agg(sum("cnt").as("bc"))
-        .withColumn("prefix", coalesce(sum("bc").over(wBkt), lit(0L)))
-        .select("bkt", "prefix")
-      byV.join(broadcast(bktPrefix), "bkt")
-        .withColumn("cum", col("prefix") + coalesce(sum("cnt").over(wIn), lit(0L)))
+    // two-level ranking ([[Dist.prefixScan]], exclusive frame): the
+    // distinct-price table is corpus-sized, so a flat global window would
+    // serialize on one partition at scale. cum is identical to the flat
+    // form.
+    def ranks(c: String) =
+      Dist.prefixScan(base.groupBy(c).agg(count(lit(1)).as("cnt")),
+          (col(c) / 100000L).cast("long"), Seq(col(c)),
+          Seq(Dist.Scan(col("cnt"), Dist.Sum, "cum")), exclusive = true)
         .select(col(c), (lit(2L) * col("cum") + col("cnt") + 1L).as(s"r$c"))
-    }
     val ranked = base
       .join(ranks("x"), "x")
       .join(ranks("y"), "y")

@@ -4,60 +4,112 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed equivalents of corpus-wide global windows (the q195/q196
-  * two-level bucket decomposition, shared by every operator that needs an
-  * exact global rank without funneling the corpus through one partition).
+/** Distributed equivalents of corpus-wide global windows: ONE two-level
+  * prefix scan ([[prefixScan]], Blelloch's reduce / scan / local-scan
+  * decomposition) shared by every operator that needs an exact global
+  * rank or running aggregate without funneling the corpus through one
+  * partition.
   *
-  * Level 1 groups rows into coarse buckets keyed by a monotone function
-  * of the leading sort key; the bucket table (corpus/width rows) gets
-  * per-bucket prefix counts in a bucket-cardinality window. Level 2 runs
-  * row_number WITHIN each bucket, partitioned by bucket. rn = prefix +
-  * within-bucket rank is identical to the flat global-window form the
-  * DuckDB oracles keep.
+  *  1. Rows are grouped into coarse buckets keyed by a monotone function
+  *     of the leading sort key, and each bucket is reduced to one row.
+  *  2. An exclusive window over that bucket table (one row per bucket,
+  *     one task) gives every bucket the aggregate of all prior buckets.
+  *  3. The bucket table is broadcast back to the rows (null-safe join).
+  *  4. A running window WITHIN each bucket, partitioned by bucket, is
+  *     stitched to its bucket's prefix by the scan's combiner: a sum
+  *     adds (`coalesce(prefix, 0) + running`), a min/max takes the
+  *     NULL-skipping `least`/`greatest`.
   *
-  * Scale bound on level 1: the prefix table has one row per (partition,
-  * bucket) and is broadcast by default, and its own prefix window runs in
-  * one task — so callers must size the bucket width to keep the bucket
-  * COUNT at metadata scale (≤ ~10M rows; at ~1e12 corpus rows that means
-  * buckets of ≥ ~1e5 rows). Every in-repo call site uses a fixed-arity
-  * bucket key (256-4096 buckets), far inside the bound. For bucket
-  * tables past broadcast limits pass `broadcastPrefix = false` to take a
-  * shuffle join instead (the one-task prefix window then still holds to
-  * ~100M buckets; beyond that add a third level).
+  * One flag picks the frame for every scan of a call: inclusive
+  * (UNBOUNDED PRECEDING..CURRENT ROW) or exclusive (..1 PRECEDING). The
+  * result equals the flat global-window form the DuckDB oracles keep,
+  * row for row.
+  *
+  * Scale bound on level 1: the bucket table has one row per (partition,
+  * bucket), is broadcast, and its prefix window runs in one task — so
+  * callers must size the bucket width to keep the bucket COUNT at
+  * metadata scale (≤ ~10M rows; at ~1e12 corpus rows that means buckets
+  * of ≥ ~1e5 rows). Every in-repo call site uses a fixed-arity or
+  * width-bounded bucket key, far inside the bound.
   *
   * NULL keys: the prefix join is null-safe (`<=>`), so rows whose bucket
   * or partition expression evaluates to NULL are RANKED, not dropped —
   * the NULL bucket groups together and sorts first (Spark's default
-  * ASC NULLS FIRST), matching the flat `row_number` form for an
-  * ascending leading key. For a DESCENDING leading key (negated bucket)
-  * flat desc ranks NULLs last; pre-coalesce the bucket to a sentinel
-  * that preserves your intended NULL placement in that case.
+  * ASC NULLS FIRST), matching the flat form for an ascending leading
+  * key. For a DESCENDING leading key (negated bucket) flat desc ranks
+  * NULLs last; pre-coalesce the bucket to a sentinel that preserves your
+  * intended NULL placement in that case.
   */
 object Dist {
 
-  /** Null-safe equi-join of `left` to a renamed copy of `right` on
-    * `keys` (broadcast `right` when `bcast`), keeping `left`'s key
-    * columns plus `right`'s payload columns. */
-  private def nullSafeJoin(left: DataFrame, right: DataFrame,
-      keys: Seq[String], bcast: Boolean): DataFrame = {
-    val renamed = keys.foldLeft(right)((d, k) => d.withColumnRenamed(k, "__p_" + k))
-    val cond = keys.map(k => col(k) <=> col("__p_" + k)).reduce(_ && _)
-    left.join(if (bcast) broadcast(renamed) else renamed, cond)
-      .drop(keys.map("__p_" + _): _*)
-  }
+  /** A scan combiner: `agg` reduces a bucket or a window frame, `stitch`
+    * folds a bucket's prefix into a within-bucket running value. */
+  private[ops] sealed abstract class Op(
+      val agg: Column => Column, val stitch: (Column, Column) => Column)
+  /** Running sum; a NULL prefix (first bucket) or an empty frame counts
+    * as 0. Values must be integral (the zero is 0L). */
+  private[ops] case object Sum
+      extends Op(sum(_), (p, r) => coalesce(p, lit(0L)) + coalesce(r, lit(0L)))
+  /** Running min / max; NULL for an empty prefix and frame. */
+  private[ops] case object Min extends Op(min(_), least(_, _))
+  private[ops] case object Max extends Op(max(_), greatest(_, _))
 
-  /** Appends `rn` = exact row_number over `order` (globally, or within
-    * each `partition` group when given), and optionally `total` = the
-    * matching row count, computed distributed.
+  /** One running aggregate: `op` of `value`, appended as `out`; `total`
+    * also appends `op` over the row's whole partition group. */
+  private[ops] final case class Scan(
+      value: Column, op: Op, out: String, total: Option[String] = None)
+
+  /** Appends every scan's running aggregate over `order` (globally, or
+    * within each `partition` group when given), with the frame chosen by
+    * `exclusive`, via the decomposition in the object doc.
     *
     * `bucket` MUST be monotone non-decreasing with respect to the total
     * order induced by `order` (for a descending leading key pass a
     * negated bucket). Ties across the remaining order columns are broken
-    * inside buckets, so the result equals
-    * `row_number().over(Window.partitionBy(partition: _*).orderBy(order: _*))`
-    * row for row — but the widest window ever opened is one bucket, and
-    * the bucket table itself is corpus/width rows (see the object doc
-    * for the bucket-count bound and NULL-key semantics).
+    * inside buckets, so the widest window ever opened over the rows is
+    * one bucket.
+    */
+  private[ops] def prefixScan(
+      df: DataFrame,
+      bucket: Column,
+      order: Seq[Column],
+      scans: Seq[Scan],
+      exclusive: Boolean = false,
+      partition: Seq[String] = Nil): DataFrame = {
+    val keys = partition :+ "__bkt"
+    val vs = scans.indices.map(i => s"__v$i")
+    val sv = scans.zip(vs)
+    val b = sv.foldLeft(df.withColumn("__bkt", bucket)) {
+      case (d, (s, v)) => d.withColumn(v, s.value)
+    }
+    val bucketAggs = sv.map { case (s, v) => s.op.agg(col(v)).as(v) }
+    val wBkt = Window.partitionBy(partition.map(col): _*).orderBy("__bkt")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val wAll = Window.partitionBy(partition.map(col): _*)
+    val pre = b.groupBy(keys.map(col): _*).agg(bucketAggs.head, bucketAggs.tail: _*)
+      .select(keys.map(col) ++ sv.flatMap { case (s, v) =>
+        s.op.agg(col(v)).over(wBkt).as(s"__p$v") +:
+          s.total.map(_ => s.op.agg(col(v)).over(wAll).as(s"__t$v")).toSeq
+      }: _*)
+    val renamed = keys.foldLeft(pre)((d, k) => d.withColumnRenamed(k, "__p_" + k))
+    val joined = b.join(broadcast(renamed),
+      keys.map(k => col(k) <=> col("__p_" + k)).reduce(_ && _))
+    val wIn = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding,
+        if (exclusive) -1L else Window.currentRow)
+    sv.foldLeft(joined) { case (d, (s, v)) =>
+      val scanned =
+        d.withColumn(s.out, s.op.stitch(col(s"__p$v"), s.op.agg(col(v)).over(wIn)))
+      s.total.fold(scanned)(t => scanned.withColumn(t, col(s"__t$v")))
+    }.drop(keys.map("__p_" + _) ++ ("__bkt" +: vs) ++
+      vs.flatMap(v => Seq(s"__p$v", s"__t$v")): _*)
+  }
+
+  /** Appends `rn` = exact row_number over `order` (globally, or within
+    * each `partition` group when given), and optionally `total` = the
+    * matching row count: an inclusive [[prefixScan]] counting rows. Equal
+    * to `row_number().over(Window.partitionBy(partition: _*).orderBy(order: _*))`
+    * row for row under the same `bucket` contract.
     */
   def withRowNumber(
       df: DataFrame,
@@ -65,121 +117,43 @@ object Dist {
       order: Seq[Column],
       rn: String = "rn",
       total: Option[String] = None,
-      partition: Seq[String] = Nil,
-      broadcastPrefix: Boolean = true): DataFrame = {
-    // keyed fanout (graft.Tables.fanout scaladoc): on the one-row-group
-    // driver corpus the scan + bucket compute + partial aggregation all
-    // run as ONE task; hashing by the window keys spreads them AND lets
-    // the bucket aggregation and the within-bucket window both reuse the
-    // same exchange (ReusedExchange — one shuffle total, as before, but
-    // with a parallel map side). Identity at production split counts.
-    val b = graft.Tables.fanout(df.withColumn("__bkt", bucket),
-      (partition :+ "__bkt").map(col): _*)
-    val keys = partition :+ "__bkt"
-    val wIn = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    val wBkt = Window.partitionBy(partition.map(col): _*).orderBy("__bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pre0 = b.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__bc"))
-    val pre = pre0
-      .withColumn("__pj", coalesce(sum("__bc").over(wBkt), lit(0L)))
-      .select((keys :+ "__pj").map(col): _*)
-    val ranked = nullSafeJoin(b, pre, keys, broadcastPrefix)
-      .withColumn(rn, col("__pj") + row_number().over(wIn))
-      .drop("__bkt", "__pj")
-    total match {
-      case None => ranked
-      case Some(n) if partition.isEmpty =>
-        val tot = pre0.agg(sum("__bc").cast("long").as(n))
-        ranked.crossJoin(broadcast(tot))
-      case Some(n) =>
-        val tot = pre0.groupBy(partition.map(col): _*)
-          .agg(sum("__bc").cast("long").as(n))
-        nullSafeJoin(ranked, tot, partition, bcast = true)
-    }
-  }
+      partition: Seq[String] = Nil): DataFrame =
+    prefixScan(df, bucket, order, Seq(Scan(lit(1L), Sum, rn, total)),
+      partition = partition)
 
   /** Appends `out` = exact running sum of `value` over `order`
-    * (UNBOUNDED PRECEDING..CURRENT ROW), distributed the same way:
-    * per-bucket prefix sums on the bucket table, within-bucket running
-    * sums partitioned by bucket. `value` must be integral (the prefix
-    * zero is 0L). Same `bucket` monotonicity contract, bucket-count
-    * bound, and NULL-key semantics (null-safe join; NULL buckets rank
-    * first) as [[withRowNumber]].
-    */
+    * (UNBOUNDED PRECEDING..CURRENT ROW). `value` must be integral. */
   def withRunningSum(
       df: DataFrame,
       bucket: Column,
       order: Seq[Column],
       value: Column,
-      out: String,
-      broadcastPrefix: Boolean = true): DataFrame =
-    withRunningSums(df, bucket, order, Seq(value -> out), broadcastPrefix)
+      out: String): DataFrame =
+    withRunningSums(df, bucket, order, Seq(value -> out))
 
-  /** [[withRunningSum]] for several value columns at once: ONE bucket
-    * aggregation, one prefix window, one join — not one decomposition
-    * per column. `values` maps each value expression to its output
-    * column name.
+  /** [[withRunningSum]] for several value columns at once: one bucket
+    * aggregation, one prefix window, one join. `values` maps each value
+    * expression to its output column name.
     */
   def withRunningSums(
       df: DataFrame,
       bucket: Column,
       order: Seq[Column],
-      values: Seq[(Column, String)],
-      broadcastPrefix: Boolean = true): DataFrame = {
-    val vcols = values.indices.map(i => s"__v$i")
-    // keyed fanout: see withRowNumber (same degenerate-scan rationale)
-    val b = graft.Tables.fanout(
-      values.zip(vcols).foldLeft(df.withColumn("__bkt", bucket)) {
-        case (d, ((v, _), vc)) => d.withColumn(vc, v)
-      }, col("__bkt"))
-    val wIn = Window.partitionBy("__bkt").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBkt = Window.orderBy("__bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pre = b.groupBy("__bkt")
-      .agg(vcols.map(vc => sum(vc).as(s"__bs_$vc")).head,
-        vcols.map(vc => sum(vc).as(s"__bs_$vc")).tail: _*)
-      .select(col("__bkt") +: vcols.map(vc =>
-        coalesce(sum(s"__bs_$vc").over(wBkt), lit(0L)).as(s"__ps_$vc")): _*)
-    val joined = nullSafeJoin(b, pre, Seq("__bkt"), broadcastPrefix)
-    values.zip(vcols).foldLeft(joined) { case (d, ((_, out), vc)) =>
-      d.withColumn(out, col(s"__ps_$vc") + sum(vc).over(wIn))
-    }.drop("__bkt")
-      .drop(vcols: _*)
-      .drop(vcols.map(vc => s"__ps_$vc"): _*)
-  }
+      values: Seq[(Column, String)]): DataFrame =
+    prefixScan(df, bucket, order, values.map { case (v, o) => Scan(v, Sum, o) })
 
   /** Appends `out` = exact running MIN of `value` over `order`,
     * EXCLUSIVE of the current row (UNBOUNDED PRECEDING..1 PRECEDING;
     * NULL for the first row) — the prefix-min sweep behind one-pass
-    * dominance/skyline tests. Distributed the same way as the running
-    * sums: per-bucket mins on the bucket table, an exclusive prefix-min
-    * window over buckets (one task, bucket-count rows), then a
-    * within-bucket exclusive running-min window partitioned by bucket;
-    * `least` (null-skipping) stitches the two. Same `bucket`
-    * monotonicity contract, bucket-count bound, and NULL-key semantics
-    * as [[withRowNumber]].
+    * dominance/skyline tests.
     */
   def withRunningMinExcl(
       df: DataFrame,
       bucket: Column,
       order: Seq[Column],
       value: Column,
-      out: String,
-      broadcastPrefix: Boolean = true): DataFrame = {
-    // keyed fanout: see withRowNumber (same degenerate-scan rationale)
-    val b = graft.Tables.fanout(
-      df.withColumn("__bkt", bucket).withColumn("__v", value), col("__bkt"))
-    val wIn = Window.partitionBy("__bkt").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wBkt = Window.orderBy("__bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pre = b.groupBy("__bkt").agg(min("__v").as("__bm"))
-      .select(col("__bkt"), min("__bm").over(wBkt).as("__pm"))
-    nullSafeJoin(b, pre, Seq("__bkt"), broadcastPrefix)
-      .withColumn(out, least(col("__pm"), min("__v").over(wIn)))
-      .drop("__bkt", "__v", "__pm")
-  }
+      out: String): DataFrame =
+    prefixScan(df, bucket, order, Seq(Scan(value, Min, out)), exclusive = true)
 
   /** Appends `bin` = exact `ntile(bins)` over `order` (SQL NTILE tiling:
     * the first N mod bins tiles get one extra row), via the distributed

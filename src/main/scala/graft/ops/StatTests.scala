@@ -762,8 +762,9 @@ object StatTests extends QueryModule {
     * pooled order (n_chars, source, doc_id) — a pinned discrete
     * convention, same on both engines. Every term is a rational of
     * exact integers, decimal-cast before the cross-row sum
-    * (order-free). The pooled ranking distributes via the q195/q196
-    * two-level decomposition: buckets on `n_chars DIV 64` (the leading
+    * (order-free). The pooled ranking distributes via
+    * [[Dist.prefixScan]] (a row count and a running sum in one scan):
+    * buckets on `n_chars DIV 64` (the leading
     * sort key, so cross-bucket order equals flat order), per-bucket
     * prefix counts in a bucket-cardinality window, ranks and running
     * sums within each bucket partition — j and mj identical to the
@@ -777,20 +778,9 @@ object StatTests extends QueryModule {
       .filter(col("source").isin(s2.toSeq: _*))
       .select(col("doc_id"), col("source"), col("n_chars"),
         (col("source") === s2(0)).cast("long").as("is1"))
-      .withColumn("bkt", expr("n_chars DIV 64"))
-    val wIn = Window.partitionBy("bkt")
-      .orderBy(col("n_chars"), col("source"), col("doc_id"))
-    val wInRun = wIn.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBkt = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bktPre = base.groupBy("bkt")
-      .agg(count(lit(1)).as("bc"), sum("is1").as("b1"))
-      .withColumn("pj", coalesce(sum("bc").over(wBkt), lit(0L)))
-      .withColumn("p1", coalesce(sum("b1").over(wBkt), lit(0L)))
-      .select("bkt", "pj", "p1")
-    val pooled = base.join(broadcast(bktPre), "bkt")
-      .withColumn("j", col("pj") + row_number().over(wIn))
-      .withColumn("mj", col("p1") + sum("is1").over(wInRun))
+    val pooled = Dist.prefixScan(base, expr("n_chars DIV 64"),
+      Seq(col("n_chars"), col("source"), col("doc_id")),
+      Seq(Dist.Scan(lit(1L), Dist.Sum, "j"), Dist.Scan(col("is1"), Dist.Sum, "mj")))
     val nm = pooled.agg(sum("is1").as("n"),
       (count(lit(1)) - sum("is1")).as("m"), count(lit(1)).as("nn"))
     pooled.crossJoin(broadcast(nm))

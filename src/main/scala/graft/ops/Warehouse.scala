@@ -115,10 +115,10 @@ object Warehouse extends QueryModule {
   // ---------------------------------------------------------------- q346
 
   /** Arrival-order lateness, distributed: late_us = running-max(event
-    * time in arrival order = event_id) − event time, computed by the
-    * q195/q196 two-level decomposition instead of a flat global window
-    * (which serializes the corpus through one partition). Level 1
-    * buckets arrival order (`event_id DIV 65536` — bucket count grows
+    * time in arrival order = event_id) − event time, computed by
+    * [[Dist.prefixScan]] instead of a flat global window (which
+    * serializes the corpus through one partition). Level 1 buckets
+    * arrival order (`event_id DIV 65536` — bucket count grows
     * with the corpus, each bucket a bounded 65k slice); the bucket
     * table's prefix-max window is bucket-cardinality-sized (corpus/65536
     * rows — trivial at any SF). Level 2 runs the running max WITHIN each
@@ -126,24 +126,14 @@ object Warehouse extends QueryModule {
     * within-bucket running max) — identical to the flat form. Shared by
     * q346 (lateness audit) and q388 (watermark advisor).
     */
-  private[ops] def arrivalLatenessUs(events: DataFrame): DataFrame = {
-    val base = events
-      .select(col("event_type"), col("event_id"),
-        unix_micros(col("ts")).as("us"))
-      .withColumn("bkt", expr("event_id DIV 65536"))
-    val wIn = Window.partitionBy("bkt").orderBy("event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBkt = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bktMax = base.groupBy("bkt").agg(max("us").as("bm"))
-      .withColumn("pm", max("bm").over(wBkt))
-      .select("bkt", "pm")
-    base.join(broadcast(bktMax), "bkt")
-      .withColumn("late_us",
-        greatest(coalesce(col("pm"), lit(Long.MinValue)),
-          max("us").over(wIn)) - col("us"))
-      .drop("bkt", "pm")
-  }
+  private[ops] def arrivalLatenessUs(events: DataFrame): DataFrame =
+    Dist.prefixScan(
+        events.select(col("event_type"), col("event_id"),
+          unix_micros(col("ts")).as("us")),
+        expr("event_id DIV 65536"), Seq(col("event_id")),
+        Seq(Dist.Scan(col("us"), Dist.Max, "max_us")))
+      .withColumn("late_us", col("max_us") - col("us"))
+      .drop("max_us")
 
   /** Event-time lateness audit: with event_id as the documented arrival
     * order, lateness = running-max(event time) − event time. The report

@@ -24,6 +24,8 @@ object StreamingOps extends QueryModule {
   private val tsTypes =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
 
+  private[graft] def resetMemo(): Unit = tsTypes.clear()
+
   private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
