@@ -3,8 +3,9 @@ package graft
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val n = args(1).toInt
-    val spark = org.apache.spark.sql.SparkSession.builder().master(sys.env.getOrElse("SPARK_GRAFT_MASTER","local[32]"))
-      .config("spark.sql.shuffle.partitions",sys.env.getOrElse("SPARK_GRAFT_SHUF","32")).config("spark.ui.enabled","false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus).config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(2).foreach { q =>
       (1 to n).foreach { i =>

@@ -46,7 +46,7 @@ object ScaleUp {
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .appName("graft-scaleup")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

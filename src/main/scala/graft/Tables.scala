@@ -106,6 +106,12 @@ object Tables {
   * rounding boundary (x.5 at scale s>=1) is never exactly representable as
   * a binary double, so the double->decimal cast itself is also
   * engine-independent.
+  *
+  * Terms a DECIMAL cast cannot carry exactly (logs, powers, ratios) use
+  * the second tool, [[Num.osum]]: collect `(key…, value)`, sort it, and
+  * fold left from 0.0. Both engines then add the same doubles in the same
+  * order. The DuckDB twin is
+  * `list_reduce(list_prepend(CAST(0 AS DOUBLE), list(v ORDER BY k…, v)), (a, x) -> a + x)`.
   */
 object Num {
   import org.apache.spark.sql.Column
@@ -124,6 +130,22 @@ object Num {
 
   /** Deterministic average: exact decimal sum divided by count. */
   def davg(c: Column, scale: Int = 2): Column = dsum(c, scale) / count(lit(1))
+
+  // collect (by…, v) and sort it; fields are named by position so a key
+  // column called `v` cannot shadow the value
+  private def sorted(v: Column, by: Column*): Column =
+    array_sort(collect_list(struct(
+      by.zipWithIndex.map { case (k, i) => k.as(s"_$i") } :+ v.as("_v"): _*)))
+
+  /** Aggregate: the values of `v` in ascending `(by…, v)` order. */
+  def sortedBy(v: Column, by: Column*): Column =
+    transform(sorted(v, by: _*), e => e.getField("_v"))
+
+  /** Aggregate: left fold from 0.0 of `v` in ascending `(by…, v)` order,
+    * independent of how rows reach the aggregate. A NULL value makes the
+    * sum NULL. */
+  def osum(v: Column, by: Column*): Column =
+    aggregate(sorted(v, by: _*), lit(0.0), (acc, x) => acc + x.getField("_v"))
 
   /** x·2^50 as an exact decimal integer. The power-of-two multiply is
     * exact in IEEE doubles, and for float32-origin data (|x| ≳ 1e-8,

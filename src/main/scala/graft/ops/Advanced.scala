@@ -78,8 +78,7 @@ object Advanced extends QueryModule {
     hits
       .groupBy("qid")
       .agg(count(lit(1)).as("n_rel"), min("rk").as("first_rel"),
-        expr("""aggregate(array_sort(collect_list(rk)), CAST(0.0 AS DOUBLE),
-                (acc, r) -> acc + 1.0 / log2(CAST(r + 1 AS DOUBLE)))""").as("dcg"))
+        osum(expr("1.0 / log2(CAST(rk + 1 AS DOUBLE))"), col("rk")).as("dcg"))
       .join(retrieved.groupBy("qid").agg(count(lit(1)).as("n_ret")), Seq("qid"), "right")
       .select(col("qid"), col("n_ret"),
         coalesce(col("n_rel"), lit(0L)).as("n_rel"),
@@ -185,10 +184,7 @@ object Advanced extends QueryModule {
     nonAdj.join(broadcast(deg), "w")
       .groupBy("u", "v")
       .agg(count(lit(1)).as("n_common"),
-        expr("""aggregate(
-            array_sort(collect_list(named_struct('w', w, 'term',
-              1.0 / ln(CAST(deg AS DOUBLE))))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("aa"))
+        osum(expr("1.0 / ln(CAST(deg AS DOUBLE))"), col("w")).as("aa"))
       .select(col("u"), col("v"), col("n_common"), round(col("aa"), 6).as("aa_score"))
       .orderBy(col("aa_score").desc, col("u"), col("v"))
   }
@@ -530,14 +526,8 @@ object Advanced extends QueryModule {
         "CAST(n_s AS DOUBLE) / (CAST(k AS DOUBLE) * CAST(n_sa AS DOUBLE))"))
       .groupBy("k", "n")
       .agg(
-        expr("""aggregate(
-            array_sort(collect_list(named_struct('seg', seg, 'et', event_type,
-              'v', CAST(s_sa AS DOUBLE) * w))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)""").as("ips_num"),
-        expr("""aggregate(
-            array_sort(collect_list(named_struct('seg', seg, 'et', event_type,
-              'v', CAST(n_sa AS DOUBLE) * w))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)""").as("w_sum"))
+        osum(expr("CAST(s_sa AS DOUBLE) * w"), col("seg"), col("event_type")).as("ips_num"),
+        osum(expr("CAST(n_sa AS DOUBLE) * w"), col("seg"), col("event_type")).as("w_sum"))
       .select(col("k"), col("n"),
         round(expr("ips_num / CAST(n AS DOUBLE) / 100.0"), 6).as("ips_value"),
         round(expr("ips_num / w_sum / 100.0"), 6).as("snips_value"))
@@ -929,9 +919,7 @@ object Advanced extends QueryModule {
       .groupBy("k").agg(count(lit(1)).as("nk"))
     degHist.agg(sum("nk").as("n"), count(lit(1)).as("n_distinct_k"),
         max("k").as("k_max"),
-        expr(s"""aggregate(array_sort(collect_list(named_struct('k', k,
-            'term', nk * ln(CAST(k AS DOUBLE) / ($kmin - 0.5))))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("lsum"))
+        osum(expr(s"nk * ln(CAST(k AS DOUBLE) / ($kmin - 0.5))"), col("k")).as("lsum"))
       .select(lit(kmin).as("k_min"), col("n"), col("n_distinct_k"),
         col("k_max"),
         round(expr("1.0 + CAST(n AS DOUBLE) / lsum"), 6).as("alpha"))

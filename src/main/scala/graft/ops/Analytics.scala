@@ -190,9 +190,7 @@ object Analytics extends QueryModule {
       // intermediates (both engines add IDENTICAL doubles in IDENTICAL
       // order => identical sums)
       val mass = contrib.groupBy("dst")
-        .agg(aggregate(
-          array_sort(collect_list(struct(col("src").as("s"), col("c").as("c")))),
-          lit(0.0), (acc, x) => acc + x.getField("c")).as("m"))
+        .agg(osum(col("c"), col("src")).as("m"))
       r = nodes.join(mass, col("node") === col("dst"), "left")
         .select(col("node"),
           (lit(0.15 / n) + lit(0.85) * coalesce(col("m"), lit(0.0))).as("pr"))
@@ -554,9 +552,7 @@ object Analytics extends QueryModule {
           expr("cast(n * (n - 1) as double)")) / lit(100.0)).as("sd"))
       .withColumn("w", col("n").cast("double") * col("sd"))
     val totW = strata
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("event_type").as("k"), col("w").as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as("tot"))
+      .agg(osum(col("w"), col("event_type")).as("tot"))
     strata.crossJoin(broadcast(totW))
       .select(col("event_type"), col("n"),
         dec(col("sd"), 6).cast("double").as("sd"),
@@ -705,23 +701,28 @@ object Analytics extends QueryModule {
     */
   def chi2Independence(docs: DataFrame): DataFrame = {
     val cells = docs.groupBy("lang", "source").agg(count(lit(1)).as("o"))
-      .localCheckpoint() // tiny; reused by three totals below
-    val rows = cells.groupBy("lang").agg(sum("o").as("r"))
-    val cols = cells.groupBy("source").agg(sum("o").as("c"))
+      .localCheckpoint() // tiny; reused by the margins and dof below
+    val dof = cells.agg(
+      ((countDistinct("lang") - 1) * (countDistinct("source") - 1)).as("dof"))
+    contingencyChi2(cells, "lang", "source").crossJoin(dof)
+      .select(round(col("chi2"), 6).as("chi2"), col("dof"))
+  }
+
+  /** Σ(o−e)²/e over a contingency table `cells(a, b, o)`: expected
+    * counts from exact integer margins, terms summed in cell order.
+    * One row, column `chi2` (unrounded); q157 and q206 share it.
+    */
+  private def contingencyChi2(cells: DataFrame, a: String, b: String): DataFrame = {
+    val rows = cells.groupBy(a).agg(sum("o").as("r"))
+    val cols = cells.groupBy(b).agg(sum("o").as("c"))
     val n = cells.agg(sum("o").as("n"))
-    val terms = cells.join(rows, "lang").join(cols, "source").crossJoin(n)
-      .select(concat_ws("|", col("lang"), col("source")).as("cell"),
+    cells.join(broadcast(rows), a).join(broadcast(cols), b)
+      .crossJoin(broadcast(n))
+      .select(concat_ws("|", col(a), col(b)).as("cell"),
         (pow(col("o").cast("double") -
           col("r").cast("double") * col("c") / col("n"), 2) /
           (col("r").cast("double") * col("c") / col("n"))).as("t"))
-    val dof = cells.agg(
-      ((countDistinct("lang") - 1) * (countDistinct("source") - 1)).as("dof"))
-    terms.agg(
-        round(aggregate(
-          array_sort(collect_list(struct(col("cell").as("k"), col("t").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v")), 6).as("chi2"))
-      .crossJoin(dof)
-      .select(col("chi2"), col("dof"))
+      .agg(osum(col("t"), col("cell")).as("chi2"))
   }
 
   private val chi2Oracle = """
@@ -1824,10 +1825,7 @@ object Analytics extends QueryModule {
   def journeyPaths(events: DataFrame, k: Int = 20): DataFrame = {
     val seqs = events
       .groupBy("user_id")
-      .agg(array_sort(collect_list(named_struct(
-        lit("ts"), col("ts"), lit("id"), col("event_id"),
-        lit("t"), col("event_type")))).as("evs"))
-      .select(expr("transform(evs, e -> e.t)").as("ts"))
+      .agg(sortedBy(col("event_type"), col("ts"), col("event_id")).as("ts"))
       .filter(size(col("ts")) >= 3)
     seqs
       .select(explode(expr(
@@ -1863,14 +1861,13 @@ object Analytics extends QueryModule {
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg((sum(round(col("value") * 100).cast("decimal(18,0)")).cast("double") / 100.0).as("v"))
     daily.groupBy("event_type")
-      .agg(count(lit(1)).as("n_days"),
-        expr("""aggregate(
-            slice(array_sort(collect_list(named_struct('d', day, 'v', v))), 2, count(1) - 1),
-            array_sort(collect_list(named_struct('d', day, 'v', v)))[0].v,
-            (s, x) -> cast(0.3 as double) * x.v + cast(0.7 as double) * s)""").as("ewma_raw"),
+      .agg(count(lit(1)).as("n_days"), sortedBy(col("v"), col("day")).as("vs"),
         max_by(col("v"), col("day")).as("last_raw"))
       .select(col("event_type"), col("n_days"),
-        round(col("ewma_raw"), 6).as("ewma_last"), col("last_raw"))
+        round(expr("""aggregate(slice(vs, 2, n_days - 1), vs[0],
+            (s, x) -> cast(0.3 as double) * x + cast(0.7 as double) * s)"""), 6)
+          .as("ewma_last"),
+        col("last_raw"))
       .orderBy("event_type")
   }
 
@@ -2062,10 +2059,10 @@ object Analytics extends QueryModule {
       .crossJoin(broadcast(total))
       .select(col("x"), col("y"),
         expr("cast(nxy as double) / cast(n as double) * ln(cast(nxy as double) * cast(n as double) / (cast(nx as double) * cast(ny as double)))").as("t"))
-      .agg(expr("aggregate(array_sort(collect_list(named_struct('x', x, 'y', y, 't', t))), 0d, (s, e) -> s + e.t)").as("mi"))
+      .agg(osum(col("t"), col("x"), col("y")).as("mi"))
     def entropy(m: DataFrame, k: String, nc: String) = m.crossJoin(broadcast(total))
       .select(col(k), expr(s"-(cast($nc as double) / cast(n as double)) * ln(cast($nc as double) / cast(n as double))").as("t"))
-      .agg(expr(s"aggregate(array_sort(collect_list(named_struct('k', $k, 't', t))), 0d, (s, e) -> s + e.t)").as(s"h_$k"))
+      .agg(osum(col("t"), col(k)).as(s"h_$k"))
     mi.crossJoin(broadcast(entropy(mx, "x", "nx")))
       .crossJoin(broadcast(entropy(my, "y", "ny")))
       .crossJoin(broadcast(total))
@@ -2224,20 +2221,9 @@ object Analytics extends QueryModule {
         col("o_orderstatus").as("sy"))
       .agg(count(lit(1)).as("o"))
       .localCheckpoint() // tiny; reused by margins + counts below
-    val rows = cells.groupBy("px").agg(sum("o").as("r"))
-    val cols = cells.groupBy("sy").agg(sum("o").as("c"))
     val n = cells.agg(sum("o").as("n"))
     val dims = cells.agg(countDistinct("px").as("nr"), countDistinct("sy").as("nc"))
-    val chi2 = cells.join(broadcast(rows), "px").join(broadcast(cols), "sy")
-      .crossJoin(broadcast(n))
-      .select(concat_ws("|", col("px"), col("sy")).as("cell"),
-        (pow(col("o").cast("double") -
-          col("r").cast("double") * col("c") / col("n"), 2) /
-          (col("r").cast("double") * col("c") / col("n"))).as("t"))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("cell").as("k"), col("t").as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as("chi2"))
-    chi2.crossJoin(broadcast(n)).crossJoin(broadcast(dims))
+    contingencyChi2(cells, "px", "sy").crossJoin(broadcast(n)).crossJoin(broadcast(dims))
       .select(round(col("chi2"), 6).as("chi2"),
         ((col("nr") - 1) * (col("nc") - 1)).as("dof"),
         round(sqrt(col("chi2") / col("n") /
@@ -2361,16 +2347,12 @@ object Analytics extends QueryModule {
         (((col("ss") - col("sk")).cast("double")) /
           ((col("nn") - col("nk")).cast("double")) / 100.0).as("mk"))
     val jk = loo.groupBy("g")
-      .agg((aggregate(
-          array_sort(collect_list(struct(col("n_name").as("k"), col("mk").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v")) / col("g")).as("mj"))
+      .agg((osum(col("mk"), col("n_name")) / col("g")).as("mj"))
     loo.join(broadcast(jk), "g")
       .select(col("g"), col("n_name"),
         (pow(col("mk") - col("mj"), 2)).as("d2"), col("mj"))
       .groupBy("g", "mj")
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("n_name").as("k"), col("d2").as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as("ssd"))
+      .agg(osum(col("d2"), col("n_name")).as("ssd"))
       .crossJoin(broadcast(tot.select(
         (col("ss").cast("double") / col("nn").cast("double") / 100.0).as("mean"))))
       .select(col("g"), round(col("mean"), 6).as("mean"),
@@ -2488,9 +2470,7 @@ object Analytics extends QueryModule {
       .withColumn("detr", col("rev") - col("trend"))
       .localCheckpoint() // calendar-sized; read by the seasonal join too
     val seas = t.groupBy(month(col("mon")).as("moy"))
-      .agg((aggregate(
-          array_sort(collect_list(struct(col("mon").as("k"), col("detr").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v")) / count(lit(1))).as("seasonal"))
+      .agg((osum(col("detr"), col("mon")) / count(lit(1))).as("seasonal"))
     t.join(broadcast(seas), month(col("mon")) === col("moy"))
       // floor(x*1e6+0.5)/1e6 instead of round(x, 6): at sf1 the trend
       // magnitude (~5e9) puts 1e-6 below the double's ulp, where the
@@ -2553,9 +2533,7 @@ object Analytics extends QueryModule {
         // from exact decimals; identical in both engines)
         (col("sk").cast("double") * col("sk").cast("double") /
           col("nk").cast("double")).as("b"))
-    val ssb = parts.agg(aggregate(
-      array_sort(collect_list(struct(col("event_type").as("key"), col("b").as("v")))),
-      lit(0.0), (acc, x) => acc + x.getField("v")).as("sum_b"))
+    val ssb = parts.agg(osum(col("b"), col("event_type")).as("sum_b"))
     ssb.crossJoin(broadcast(tot))
       .select(col("k"), col("n"),
         round((col("sum_b") - col("s").cast("double") * col("s").cast("double")
@@ -2623,9 +2601,7 @@ object Analytics extends QueryModule {
     val ece = gapped.crossJoin(broadcast(tot.select("nt")))
       .select(col("bin"), (col("n").cast("double") / col("nt").cast("double") *
         col("gap")).as("t"))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("bin").as("k"), col("t").as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as("ece"))
+      .agg(osum(col("t"), col("bin")).as("ece"))
     val summary = tot.crossJoin(broadcast(ece))
       .select(round(col("ece"), 6).as("ece"),
         round((col("sqt").cast("double") /
@@ -2733,11 +2709,8 @@ object Analytics extends QueryModule {
         sum("w").cast("double") / 100.0).as("est"))
       .localCheckpoint() // B rows; feeds both folds + the percentile
     val folds = est.agg(count(lit(1)).as("nb"),
-      aggregate(array_sort(collect_list(struct(col("r").as("k"), col("est").as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as("s1"),
-      aggregate(array_sort(collect_list(struct(col("r").as("k"),
-          (col("est") * col("est")).as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as("s2"),
+      osum(col("est"), col("r")).as("s1"),
+      osum(col("est") * col("est"), col("r")).as("s2"),
       expr("percentile(est, 0.025)").as("lo"),
       expr("percentile(est, 0.975)").as("hi"))
     val full = orders.agg(count(lit(1)).as("n"),
@@ -2873,15 +2846,15 @@ object Analytics extends QueryModule {
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("mon"))
       .agg((sum(round(col("o_totalprice") * 100).cast("decimal(18,0)"))
         .cast("double") / 100.0).as("v"))
-    m.agg(count(lit(1)).as("n_months"),
-        expr("""aggregate(
-            slice(array_sort(collect_list(named_struct('m', mon, 'v', v))), 2, count(1) - 1),
-            array(array_sort(collect_list(named_struct('m', mon, 'v', v)))[0].v, cast(0.0 as double)),
+    m.agg(count(lit(1)).as("n_months"), sortedBy(col("v"), col("mon")).as("vs"))
+      .withColumn("st", expr("""aggregate(
+            slice(vs, 2, n_months - 1),
+            array(vs[0], cast(0.0 as double)),
             (s, x) -> array(
-              cast(0.3 as double) * x.v + cast(0.7 as double) * (s[0] + s[1]),
-              cast(0.1 as double) * (cast(0.3 as double) * x.v
+              cast(0.3 as double) * x + cast(0.7 as double) * (s[0] + s[1]),
+              cast(0.1 as double) * (cast(0.3 as double) * x
                 + cast(0.7 as double) * (s[0] + s[1]) - s[0])
-                + cast(0.9 as double) * s[1]))""").as("st"))
+                + cast(0.9 as double) * s[1]))"""))
       // explicit floor-rounding for the q213 reason: level/forecast
       // magnitudes at sf1 put 1e-6 below the double ulp, where the
       // engines' ROUND implementations disagree on identical bits

@@ -534,11 +534,8 @@ object Evaluate extends QueryModule {
       .withColumn("p", expr("CAST(c + 1 AS DOUBLE) / CAST(cmax + 2 AS DOUBLE)"))
       .groupBy("event_type")
       .agg(sum("n").as("n"), sum("npos").as("n_pos"),
-        expr("""aggregate(
-            array_sort(collect_list(named_struct('c', c,
-              'term', CAST(npos AS DOUBLE) * ln(p)
-                      + CAST(n - npos AS DOUBLE) * ln(1.0 - p)))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("ll_sum"))
+        osum(expr("CAST(npos AS DOUBLE) * ln(p) + CAST(n - npos AS DOUBLE) * ln(1.0 - p)"),
+          col("c")).as("ll_sum"))
       .select(col("event_type"), col("n"), col("n_pos"),
         round(expr("-ll_sum / CAST(n AS DOUBLE)"), 6).as("log_loss"))
       .orderBy("event_type")

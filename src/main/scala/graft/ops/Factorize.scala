@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, QueryModule}
 import graft.Tables._
-import graft.Num.dec
+import graft.Num.{dec, sortedBy}
 
 /** Matrix/allocation primitives for corpus curation (SURVEY.md §2.9
   * extension surface): a deterministic distributed power iteration for
@@ -64,8 +64,7 @@ object Factorize extends QueryModule {
       .groupBy("dim")
       .agg(sum(dec(col("t") * col("xv"), 12)).cast("double").as("w"))
     def asArr(v: DataFrame): DataFrame =
-      v.agg(expr("transform(array_sort(collect_list(named_struct(" +
-        "'d', dim, 'v', v))), e -> e.v)").as("varr"))
+      v.agg(sortedBy(col("v"), col("dim")).as("varr"))
     def step(v: DataFrame): DataFrame = wOf(tOf(v))
     // max-abs normalize + pin to the 1e-9 grid so iter-2 operands match
     def normalize(w: DataFrame): DataFrame = {

@@ -449,12 +449,10 @@ object Funcs extends QueryModule {
     base.groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         (sum(col("v100")).cast("double") / count(lit(1)) / 100.0).as("arith_mean"),
-        expr("""exp(aggregate(array_sort(collect_list(named_struct(
-              'i', event_id, 'v', ln(v100 / cast(100.0 as double))))),
-              0d, (s, x) -> s + x.v) / count(1))""").as("geo_mean"),
-        expr("""cast(count(1) as double) / aggregate(array_sort(collect_list(named_struct(
-              'i', event_id, 'v', cast(100.0 as double) / v100))),
-              0d, (s, x) -> s + x.v)""").as("harm_mean"))
+        exp(osum(expr("ln(v100 / cast(100.0 as double))"), col("event_id"))
+          / count(lit(1))).as("geo_mean"),
+        (count(lit(1)).cast("double")
+          / osum(expr("cast(100.0 as double) / v100"), col("event_id"))).as("harm_mean"))
       .select(col("event_type"), col("n"),
         col("arith_mean"),
         round(col("geo_mean"), 6).as("geo_mean"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, QueryModule}
 import graft.Tables._
+import graft.Num.osum
 
 /** Corpus-insight and distribution-comparison operators a curation
   * platform layers over the engine (SURVEY.md §2.9 extension surface):
@@ -370,16 +371,12 @@ object Insights extends QueryModule {
           | / (CAST(cu AS DOUBLE) + CAST(v AS DOUBLE)))""".stripMargin))
       .groupBy("doc_id", "source")
       .agg(sum("k").as("n_bg"),
-        expr("""aggregate(
-            array_sort(collect_list(named_struct('w1', w1, 'w2', w2, 'v', term))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)""").as("s"))
+        osum(col("term"), col("w1"), col("w2")).as("s"))
       .withColumn("xent", expr("-s / CAST(n_bg AS DOUBLE)"))
     perDoc.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        round(expr("""aggregate(
-            array_sort(collect_list(named_struct('d', doc_id, 'v', xent))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)
-          | / CAST(COUNT(1) AS DOUBLE)""".stripMargin), 6).as("avg_xent_bits"))
+        round(osum(col("xent"), col("doc_id")) / count(lit(1)).cast("double"), 6)
+          .as("avg_xent_bits"))
       .orderBy("source")
   }
 

@@ -1455,11 +1455,8 @@ object Series extends QueryModule {
       .groupBy("event_type")
       .agg(max("n").as("n_days"),
         round(max(when(col("lag") === 1, col("rho"))), 6).as("rho1"),
-        round(expr("""max(CAST(n AS DOUBLE) * CAST(n + 2 AS DOUBLE))
-            * aggregate(
-                array_sort(collect_list(named_struct('lag', lag,
-                  'term', rho * rho / CAST(n - lag AS DOUBLE)))),
-                CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)"""), 6)
+        round(expr("max(CAST(n AS DOUBLE) * CAST(n + 2 AS DOUBLE))")
+          * osum(expr("rho * rho / CAST(n - lag AS DOUBLE)"), col("lag")), 6)
           .as("q_lb"))
       .orderBy("event_type")
   }
@@ -1545,9 +1542,7 @@ object Series extends QueryModule {
           "CAST(r2 AS DOUBLE) / sqrt(CAST(svar AS DOUBLE))"))
       devs.groupBy("event_type")
         .agg(count(lit(1)).as("n_win"),
-          expr("""aggregate(array_sort(collect_list(named_struct(
-              'win', win, 'term', rs))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("rs_sum"))
+          osum(col("rs"), col("win")).as("rs_sum"))
         .select(col("event_type"), lit(w.toLong).as("w"),
           col("n_win"), expr("rs_sum / n_win").as("mean_rs"))
     }
@@ -1557,8 +1552,10 @@ object Series extends QueryModule {
         round(max(when(col("w") === 5, col("mean_rs"))), 6).as("rs5"),
         round(max(when(col("w") === 10, col("mean_rs"))), 6).as("rs10"),
         round(max(when(col("w") === 15, col("mean_rs"))), 6).as("rs15"),
-        expr("""aggregate(array_sort(collect_list(named_struct('w', w,
-            'x', ln(CAST(w AS DOUBLE)), 'y', ln(mean_rs)))),
+        sortedBy(struct(expr("ln(CAST(w AS DOUBLE))").as("x"),
+          expr("ln(mean_rs)").as("y")), col("w")).as("pts"))
+      .select(col("event_type"), col("rs5"), col("rs10"), col("rs15"),
+        round(expr("""aggregate(pts,
           named_struct('m', CAST(0 AS DOUBLE), 'sx', CAST(0 AS DOUBLE),
             'sy', CAST(0 AS DOUBLE), 'sxx', CAST(0 AS DOUBLE),
             'sxy', CAST(0 AS DOUBLE)),
@@ -1566,9 +1563,7 @@ object Series extends QueryModule {
             'sy', acc.sy + p.y, 'sxx', acc.sxx + p.x * p.x,
             'sxy', acc.sxy + p.x * p.y),
           acc -> (acc.m * acc.sxy - acc.sx * acc.sy)
-                 / (acc.m * acc.sxx - acc.sx * acc.sx))""").as("hraw"))
-      .select(col("event_type"), col("rs5"), col("rs10"), col("rs15"),
-        round(col("hraw"), 6).as("hurst"))
+                 / (acc.m * acc.sxx - acc.sx * acc.sx))"""), 6).as("hurst"))
       .orderBy("event_type")
   }
 

@@ -150,11 +150,8 @@ object StatTests extends QueryModule {
       sum("n").as("n"),
       sum(col("s")).cast("decimal(38,1)").as("stot"),
       sum(col("q")).cast("decimal(38,2)").as("qtot"),
-      expr("""aggregate(
-          array_sort(collect_list(named_struct(
-            'g', event_type,
-            'term', CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("ssq"))
+      osum(expr("CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)"),
+        col("event_type")).as("ssq"))
       .select(col("k"), col("n"),
         round(expr("CAST(stot AS DOUBLE) / CAST(n AS DOUBLE) / 100.0"), 6)
           .as("mean_adev"),
@@ -395,9 +392,7 @@ object StatTests extends QueryModule {
           | * (CAST(nij AS DOUBLE) - CAST(ri AS DOUBLE) * CAST(cj AS DOUBLE) / CAST(nn AS DOUBLE))
           | / (CAST(ri AS DOUBLE) * CAST(cj AS DOUBLE) / CAST(nn AS DOUBLE))""".stripMargin))
       .groupBy(col("nn"), col("r"), col("c"))
-      .agg(expr("""aggregate(
-          array_sort(collect_list(named_struct('et', et, 'dw', dw, 'term', term))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("chi2"))
+      .agg(osum(col("term"), col("et"), col("dw")).as("chi2"))
       .select(col("nn").as("n"), col("r"), col("c"),
         round(col("chi2"), 6).as("chi2"),
         round(expr("sqrt(chi2 / (CAST(nn AS DOUBLE) * CAST(least(r, c) - 1 AS DOUBLE)))"), 6)
@@ -509,9 +504,7 @@ object StatTests extends QueryModule {
         """(CAST(nst AS DOUBLE) / CAST(nn AS DOUBLE))
           | * ln(CAST(nst AS DOUBLE) / CAST(ns AS DOUBLE))""".stripMargin))
       .groupBy(col("nn"), col("n_states"))
-      .agg(expr("""aggregate(
-          array_sort(collect_list(named_struct('s', s, 'd', d, 'term', term))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc - x.term)""").as("h"))
+      .agg(osum(-col("term"), col("s"), col("d")).as("h"))
       .select(col("nn").as("n_transitions"), col("n_states"),
         round(col("h"), 6).as("entropy_rate"),
         round(exp(col("h")), 6).as("perplexity"))
@@ -567,9 +560,7 @@ object StatTests extends QueryModule {
     item.groupBy().agg(
         count(lit(1)).as("k"),
         max("nu").as("n_users"),
-        expr("""aggregate(
-            array_sort(collect_list(named_struct('i', event_type, 'v', var_i))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)""").as("sum_var"))
+        osum(col("var_i"), col("event_type")).as("sum_var"))
       .crossJoin(totals)
       .withColumn("var_total", expr(
         """(CAST(qt AS DOUBLE) - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / CAST(nu2 AS DOUBLE))
@@ -649,12 +640,9 @@ object StatTests extends QueryModule {
     deaths.as("a").join(deaths.as("b"), col("b.dur") <= col("a.dur"))
       .groupBy(col("a.dur").as("dur"), col("a.d").as("d"), col("a.at_risk").as("at_risk"))
       .agg(
-        expr("""aggregate(
-          array_sort(collect_list(named_struct('t', b.dur,
-            'lnf', CASE WHEN b.d < b.at_risk
+        osum(expr("""CASE WHEN b.d < b.at_risk
               THEN ln(1.0 - CAST(b.d AS DOUBLE) / CAST(b.at_risk AS DOUBLE))
-              ELSE 0.0 END))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.lnf)""").as("lns"),
+              ELSE 0.0 END"""), col("b.dur")).as("lns"),
         max(when(col("b.d") === col("b.at_risk"), 1).otherwise(0)).as("any0"))
       .select(col("dur"), col("d"), col("at_risk"),
         round(when(col("any0") === 1, lit(0.0)).otherwise(exp(col("lns"))), 6)
@@ -981,11 +969,8 @@ object StatTests extends QueryModule {
     grp.crossJoin(broadcast(ties))
       .agg(count(lit(1)).as("k"), sum("nj").as("n"),
         max(col("tie3")).as("tie3"),
-        expr("""aggregate(
-            array_sort(collect_list(named_struct('g', event_type,
-              'term', CAST(r2j AS DOUBLE) * CAST(r2j AS DOUBLE) / 4.0
-                      / CAST(nj AS DOUBLE)))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("ssq"))
+        osum(expr("CAST(r2j AS DOUBLE) * CAST(r2j AS DOUBLE) / 4.0 / CAST(nj AS DOUBLE)"),
+          col("event_type")).as("ssq"))
       .select(col("k"), col("n"),
         round(expr("""12.0 * ssq / (CAST(n AS DOUBLE) * CAST(n + 1 AS DOUBLE))
             - 3.0 * CAST(n + 1 AS DOUBLE)"""), 6).as("h"),
@@ -1116,16 +1101,10 @@ object StatTests extends QueryModule {
       .withColumn("ssd", expr(
         "CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)"))
     grp.agg(count(lit(1)).as("k"), sum("n").as("n"),
-        expr("""aggregate(array_sort(collect_list(named_struct(
-            'g', event_type, 'term', ssd))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("f1"),
-        expr("""aggregate(array_sort(collect_list(named_struct(
-            'g', event_type,
-            'term', CAST(n - 1 AS DOUBLE) * ln(ssd / CAST(n - 1 AS DOUBLE))))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("f2"),
-        expr("""aggregate(array_sort(collect_list(named_struct(
-            'g', event_type, 'term', 1.0 / CAST(n - 1 AS DOUBLE)))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("f3"))
+        osum(col("ssd"), col("event_type")).as("f1"),
+        osum(expr("CAST(n - 1 AS DOUBLE) * ln(ssd / CAST(n - 1 AS DOUBLE))"),
+          col("event_type")).as("f2"),
+        osum(expr("1.0 / CAST(n - 1 AS DOUBLE)"), col("event_type")).as("f3"))
       .select(col("k"), col("n"),
         round(expr("f1 / CAST(n - k AS DOUBLE) / 10000.0"), 6).as("pooled_var"),
         round(expr(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, QueryModule}
 import graft.Tables._
+import graft.Num.osum
 
 /** Corpus-forensics audit operators for training-data curation, round 8
   * of the extension surface (none exist in the reference — its text
@@ -286,13 +287,9 @@ object CorpusAudit extends QueryModule {
   def lognormalFit(docs: DataFrame): DataFrame = {
     val folded = docs.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
-      expr("""aggregate(array_sort(collect_list(named_struct(
-             |  'k', doc_id, 'v', ln(CAST(n_chars AS DOUBLE))))),
-             |  0d, (s, e) -> s + e.v)""".stripMargin).as("s1"),
-      expr("""aggregate(array_sort(collect_list(named_struct(
-             |  'k', doc_id,
-             |  'v', ln(CAST(n_chars AS DOUBLE)) * ln(CAST(n_chars AS DOUBLE))))),
-             |  0d, (s, e) -> s + e.v)""".stripMargin).as("s2"),
+      osum(expr("ln(CAST(n_chars AS DOUBLE))"), col("doc_id")).as("s1"),
+      osum(expr("ln(CAST(n_chars AS DOUBLE)) * ln(CAST(n_chars AS DOUBLE))"),
+        col("doc_id")).as("s2"),
       sum("n_chars").as("len_sum"),
       expr("percentile(n_chars, 0.5d)").as("med"))
     folded
@@ -632,10 +629,7 @@ object CorpusAudit extends QueryModule {
       .select(col("d"), col("inter"),
         (col("inter").cast("double") / col("d").cast("double")).as("a_d"))
     val rbo = agreement
-      .agg(expr(s"""aggregate(
-          transform(sort_array(collect_list(struct(d, a_d))),
-            t -> power($p, t.d - 1) * t.a_d),
-          CAST(0 AS DOUBLE), (acc, v) -> acc + v)""").as("sum_w"))
+      .agg(osum(expr(s"power($p, d - 1) * a_d"), col("d")).as("sum_w"))
       .select(round(expr(s"(1 - $p) * sum_w"), 6).as("rbo_min"),
         round(expr(s"(1 - $p) * sum_w + power($p, $depth)"), 6)
           .as("rbo_max"))

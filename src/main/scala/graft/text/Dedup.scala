@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, QueryModule}
 import graft.Tables._
+import graft.Num.osum
 
 /** Deduplication operators for a training-data pipeline (SURVEY.md §2.9):
   * exact (hash groupBy), near-dup via n-gram Jaccard with a shared-shingle
@@ -1032,11 +1033,8 @@ object Dedup extends QueryModule {
         .union(p.select(col("doc_b").as("d"))).distinct()
         .agg(count(lit(1)).as("n_docs"))
       p.agg(count(lit(1)).as("n_pairs"),
-          coalesce(round(aggregate(
-            array_sort(collect_list(struct(col("doc_a").as("ka"),
-              col("doc_b").as("kb"), col("jaccard").as("v")))),
-            lit(0.0), (acc, x) => acc + x.getField("v")) / count(lit(1)), 6),
-            lit(0.0)).as("avg_jaccard"))
+          coalesce(round(osum(col("jaccard"), col("doc_a"), col("doc_b"))
+            / count(lit(1)), 6), lit(0.0)).as("avg_jaccard"))
         .crossJoin(docsIn)
         .select(lit(t).as("threshold"), col("n_pairs"), col("n_docs"),
           col("avg_jaccard"))
@@ -1145,14 +1143,10 @@ object Dedup extends QueryModule {
       .select(col("doc_a"), col("doc_b"),
         (col("est_jaccard") - col("jaccard")).as("err"))
     val moments = m.agg(
-      round(aggregate(
-        array_sort(collect_list(struct(col("doc_a").as("ka"), col("doc_b").as("kb"),
-          abs(col("err")).as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")) / count(lit(1)), 6).as("mae"),
-      round(aggregate(
-        array_sort(collect_list(struct(col("doc_a").as("ka"), col("doc_b").as("kb"),
-          col("err").as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")) / count(lit(1)), 6).as("bias"),
+      round(osum(abs(col("err")), col("doc_a"), col("doc_b")) / count(lit(1)), 6)
+        .as("mae"),
+      round(osum(col("err"), col("doc_a"), col("doc_b")) / count(lit(1)), 6)
+        .as("bias"),
       round(max(abs(col("err"))), 6).as("max_abs_err"))
     counts.crossJoin(moments)
   }
@@ -1248,10 +1242,7 @@ object Dedup extends QueryModule {
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("source_x") === col("source_y"), 1L).otherwise(0L))
           .as("n_within"),
-        round(aggregate(
-          array_sort(collect_list(struct(col("doc_a").as("ka"),
-            col("doc_b").as("kb"), col("jaccard").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v")) / count(lit(1)), 6)
+        round(osum(col("jaccard"), col("doc_a"), col("doc_b")) / count(lit(1)), 6)
           .as("avg_jaccard"),
         sum(col("doc_a") + col("doc_b")).as("pair_checksum"))
       .orderBy("source_x", "source_y")

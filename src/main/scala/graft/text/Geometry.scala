@@ -7,7 +7,7 @@ import graft.functions.SquaredL2.squared_l2
 
 import graft.{Q, QueryModule}
 import graft.Tables._
-import graft.Num.dec
+import graft.Num.{dec, sortedBy}
 import graft.ops.Dist
 
 /** Embedding-geometry curation operators (SURVEY.md §2.9 extension
@@ -213,10 +213,8 @@ object Geometry extends QueryModule {
       .withColumn("rnk", row_number().over(
         Window.orderBy(col("score").desc, col("vec_id"))))
       .filter(col("rnk") <= 3)
-      .agg(concat_ws(",", expr(
-        """transform(sort_array(collect_list(struct(rnk, vec_id))),
-          |  s -> CAST(s.vec_id AS STRING))""".stripMargin))
-        .as("top_outliers"))
+      .agg(concat_ws(",", transform(sortedBy(col("vec_id"), col("rnk")),
+          s => s.cast("string"))).as("top_outliers"))
     scores.groupBy("label").agg(
         count(lit(1)).as("n_vecs"),
         (sum(col("score")).cast("double") / count(lit(1))).as("mean_raw"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, QueryModule}
 import graft.Tables._
-import graft.Num.dec
+import graft.Num.{dec, osum}
 
 /** Embedding-representation audits, round 8 of the extension surface
   * (none exist in the reference): linear CKA (centered kernel
@@ -71,10 +71,7 @@ object Represent extends QueryModule {
       yc.select(col("vec_id"), col("j").as("i"), col("yc").as("va")),
       ya, "yy")
     val frob = gxy.unionAll(gxx).unionAll(gyy).groupBy("g")
-      .agg(expr("""aggregate(
-          transform(sort_array(collect_list(struct(i, j, c))),
-            t -> t.c * t.c),
-          CAST(0 AS DOUBLE), (acc, v) -> acc + v)""").as("f2"))
+      .agg(osum(col("c") * col("c"), col("i"), col("j")).as("f2"))
     frob.groupBy()
       .pivot("g", Seq("xy", "xx", "yy")).agg(first("f2"))
       .crossJoin(n)

@@ -308,10 +308,8 @@ object Similarity extends QueryModule {
       .select(col("pos"), col("x").cast("double").as("x"))
       .groupBy("pos").agg(min("x").as("mn"), max("x").as("mx"))
     val minmax = dims.agg(
-      expr("transform(array_sort(collect_list(struct(pos, mn))), s -> s.mn)")
-        .as("mins"),
-      expr("transform(array_sort(collect_list(struct(pos, mx))), s -> s.mx)")
-        .as("maxs"))
+      sortedBy(col("mn"), col("pos")).as("mins"),
+      sortedBy(col("mx"), col("pos")).as("maxs"))
     // codes serialize to a '|'-joined string: the compare harness sorts
     // rows by every column, and raw array cells are unsortable there
     emb.crossJoin(broadcast(minmax))

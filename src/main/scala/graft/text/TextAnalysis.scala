@@ -722,9 +722,7 @@ object TextAnalysis extends QueryModule {
     terms.groupBy("source")
       .agg(
         count(lit(1)).as("n_terms"),
-        round(aggregate(
-          array_sort(collect_list(struct(col("tok").as("t"), col("term").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v")), 6).as("kl"))
+        round(osum(col("term"), col("tok")), 6).as("kl"))
       .orderBy("source")
   }
 
@@ -824,9 +822,7 @@ object TextAnalysis extends QueryModule {
         log(col("c").cast("double") / lit(n.toDouble)).as("lp"))
     val perDoc = scored.groupBy("doc_id", "source")
       .agg(count(lit(1)).as("n_tok"),
-        aggregate(
-          array_sort(collect_list(struct(col("pos").as("p"), col("lp").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v")).as("lp_sum"))
+        osum(col("lp"), col("pos")).as("lp_sum"))
       .select(col("source"),
         round(col("lp_sum") / col("n_tok"), 9).as("avg_lp"))
     perDoc.groupBy("source")
@@ -1066,9 +1062,7 @@ object TextAnalysis extends QueryModule {
         log(col("n_chars").cast("double") / lit(xmin.toDouble)).as("lnx"))
     val perLang = tail.groupBy("lang")
       .agg(count(lit(1)).as("n_tail"),
-        aggregate(
-          array_sort(collect_list(struct(col("doc_id").as("k"), col("lnx").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v")).as("slnx"))
+        osum(col("lnx"), col("doc_id")).as("slnx"))
     val totals = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
     perLang.join(totals, "lang")
       .select(col("lang"), col("n_docs"), col("n_tail"),
@@ -1112,9 +1106,7 @@ object TextAnalysis extends QueryModule {
       .select(col("lang"), col("lang_tokens"),
         (col("lang_tokens").cast("double") / col("total_tokens").cast("double")).as("p"))
       .withColumn("pa", pow(col("p"), lit(alpha)))
-    val z = p.agg(aggregate(
-      array_sort(collect_list(struct(col("lang").as("k"), col("pa").as("v")))),
-      lit(0.0), (acc, x) => acc + x.getField("v")).as("z"))
+    val z = p.agg(osum(col("pa"), col("lang")).as("z"))
     p.crossJoin(broadcast(z))
       .select(col("lang"), col("lang_tokens"),
         round(col("p"), 6).as("share"),
@@ -1167,9 +1159,7 @@ object TextAnalysis extends QueryModule {
         expr("cast(cb + 1 as double) / cast(nb + v as double)").as("pb"))
       .select(col("tok"),
         expr("0.5 * pa * ln(pa / (0.5 * (pa + pb))) + 0.5 * pb * ln(pb / (0.5 * (pa + pb)))").as("t"))
-    terms.agg(aggregate(
-        array_sort(collect_list(struct(col("tok").as("k"), col("t").as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as("jsd"))
+    terms.agg(osum(col("t"), col("tok")).as("jsd"))
       .crossJoin(broadcast(tots))
       .select(col("v").as("vocab"), col("na").as("tokens_first"),
         col("nb").as("tokens_second"), round(col("jsd"), 6).as("jsd"),

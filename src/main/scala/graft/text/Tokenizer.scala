@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, QueryModule}
 import graft.Tables._
-import graft.Num.dec
+import graft.Num.{dec, osum}
 
 /** Tokenizer-training analytics (SURVEY.md §2.9 extension surface):
   * BPE/WordPiece merge-candidate scoring over the corpus word-frequency
@@ -141,9 +141,7 @@ object Tokenizer extends QueryModule {
           |  / CAST(cu AS DOUBLE))""".stripMargin))
       .groupBy("doc_id", "source")
       .agg(sum("k").as("n_bg"),
-        expr("""aggregate(
-            array_sort(collect_list(named_struct('w1', w1, 'w2', w2, 'v', term))),
-            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)""").as("s"))
+        osum(col("term"), col("w1"), col("w2")).as("s"))
       .withColumn("xent", round(expr("-s / CAST(n_bg AS DOUBLE)"), 9))
     perDoc.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
