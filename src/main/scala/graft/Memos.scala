@@ -12,18 +12,18 @@ package graft
   * structural instead of per-cache-audit.
   *
   * The caches cleared here hold DERIVED driver-side state only (fitted
-  * coefficient vectors, an audit row list, a committed-table path, the
-  * events `ts` physical type);
+  * coefficient vectors, an audit row list, a committed-table path);
   * prepared on-disk FIXTURES (split-source copies, bucketed tables,
   * text/XML/CSV copies) are corpus preparation declared in Bench's
   * warmup block and are NOT reset — they are keyed per sfDir and
-  * prepared for the timed sfDir before any timer starts.
+  * prepared for the timed sfDir before any timer starts. Corpus schemas
+  * need no memo: each read takes its schema from the parquet footer
+  * (`Tables.schema`), which starts no job.
   */
 object Memos {
   def reset(): Unit = {
     ml.StreamScoring.resetMemo()
     ml.Scoring.resetMemo()
     ingest.IngestQueries.resetMemo()
-    streaming.StreamingOps.resetMemo()
   }
 }

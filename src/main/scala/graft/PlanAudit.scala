@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow, Sort => LSort, Aggregate => LAggregate, GlobalLimit => LGlobalLimit, LocalLimit => LLocalLimit, LocalRelation => LLocalRelation, LogicalPlan, Join => LJoin}
 
-/** Surface-wide scale-hazard audit: plans every registered query (no
-  * execution) and flags the physical shapes that break at 100 TB:
+/** Surface-wide scale-hazard audit: plans every registered query (table
+  * reads start no schema job, but eager `localCheckpoint`s in a build
+  * still run) and flags the physical shapes that break at 100 TB:
   *
   *   - GLOBAL-WINDOW: a Window with an empty partitionSpec funnels the
   *     whole input through one task (the canonical scale-killer);

@@ -107,11 +107,10 @@ object ScaleUp {
     write(out, "region", Tables.region(spark, src))
 
     // ts goes back out as BIGINT NANOS — the driver's physical layout
-    // (TIMESTAMP(NANOS), which Spark reads as long). Writing a Spark
-    // timestamp instead would flip the physical type to INT96 and break
-    // the streaming reader's explicit LongType schema; bigint nanos keeps
-    // every reader (batch dispatch, streaming, DuckDB via the check.py
-    // make_timestamp_ns shim) on the code path the graded corpus uses.
+    // (TIMESTAMP(NANOS), which Spark reads as long); bigint nanos keeps
+    // every reader (batch and streaming through Tables.readEvents, DuckDB
+    // via the check.py make_timestamp_ns shim) on the code path the
+    // graded corpus uses.
     // ts may surface as TIMESTAMP_NTZ (driver parquet is TIMESTAMP(NANOS,
     // isAdjustedToUTC=false)); unix_micros needs TIMESTAMP — the cast is
     // value-preserving because the session timezone is pinned to UTC

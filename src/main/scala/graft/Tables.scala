@@ -1,13 +1,43 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Parquet table loader for the driver corpus (TESTDATA.md).
-  * One parquet file per table under `sfDir`; schema identical across SFs.
+/** Parquet table loader for the driver corpus (TESTDATA.md): one file
+  * per table under `sfDir` (or a Spark-written directory of part files),
+  * schema identical across SFs. Each read takes its schema from a parquet
+  * footer on the driver ([[schema]]), so building a frame starts no job.
   */
 object Tables {
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Spark's inference rule for one file, without the inference job: the
+    * footer of `path`, or of a directory's first data file in path order
+    * (names starting `_` or `.` skipped); Spark's row metadata when the
+    * writer left it, else the parquet schema converted under the session
+    * conf.
+    */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path); val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    val file = if (!st.isDirectory) st else fs.listStatus(p)
+      .filter(f => f.isFile && !"_.".contains(f.getPath.getName.head))
+      .minByOption(_.getPath.toString)
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val meta = try reader.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+  }
+
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
@@ -16,17 +46,22 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = t(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
-  /** events.parquet carries TIMESTAMP(NANOS) which Spark's parquet reader
-    * rejects; read nanos as long and convert (exact: driver data is
-    * micro-precision, so `ns div 1000` is lossless). Derived corpora
-    * (e.g. the ScaleUp output) write a regular micros timestamp — the
-    * schema dispatch keeps one loader working across both physical types.
+  def events(s: SparkSession, d: String): DataFrame =
+    readEvents(s, d)(s.read.schema(_).parquet(s"$d/events.parquet"))
+
+  /** The events table through `read` (a batch or stream reader, given
+    * the footer schema) with `ts` as session TIMESTAMP, however the
+    * corpus stores it: TIMESTAMP(NANOS) and the ScaleUp output's bigint
+    * nanos read as long (nanosAsLong is set before [[schema]] converts
+    * the footer; `ns div 1000` is lossless on micro-precision data),
+    * TIMESTAMP_MICROS reads as NTZ, and a Spark-written copy is TIMESTAMP.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  private[graft] def readEvents(s: SparkSession, d: String)(
+      read: StructType => DataFrame): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    val raw = t(s, d, "events")
+    val raw = read(schema(s, s"$d/events.parquet"))
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

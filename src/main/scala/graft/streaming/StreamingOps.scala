@@ -15,46 +15,11 @@ import graft.{Q, QueryModule}
   */
 object StreamingOps extends QueryModule {
 
-  /** Read the events table as a file-source stream (explicit schema as
-    * streaming requires; nanos ts handled as in Tables.events).
-    */
-  // The ts physical-type probe costs a file index + footer read; every
-  // streaming query pays it (q69 twice) and the answer is a property of
-  // the fixture dir — cache it like the split-source dir below.
-  private val tsTypes =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
-
-  private[graft] def resetMemo(): Unit = tsTypes.clear()
-
-  private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The corpus has shipped events.ts as TIMESTAMP(NANOS) (reads as
-    // long under nanosAsLong) and as TIMESTAMP_MICROS/NTZ — probe the
-    // batch footer and mirror Tables.events' dispatch instead of
-    // hardcoding one physical type.
-    val tsType = tsTypes.computeIfAbsent(sfDir,
-      d => spark.read.parquet(s"$d/events.parquet").schema("ts").dataType)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet") // file source needs a directory
-      .parquet(sfDir)
-    tsType match {
-      case LongType => // nanos-as-long: micro-precision data, lossless div
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // NTZ → session-time TIMESTAMP, mirroring Tables.events: watermarks
-      // and unix_micros reject NTZ, and the session is pinned UTC
-      case _: TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-  }
+  /** The events table as a file-source stream (the source needs a
+    * directory, so it globs the one file). */
+  private def eventStream(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Tables.readEvents(spark, sfDir)(spark.readStream.schema(_)
+      .option("pathGlobFilter", "events.parquet").parquet(sfDir))
 
   /** Run `f` with a transient shuffle-partition setting: streaming state
     * stores are per-shuffle-partition (each micro-batch commits delta
@@ -560,18 +525,6 @@ object StreamingOps extends QueryModule {
       dir.toString
     })
 
-  /** The split-source events schema, shared by both foreachBatch
-    * maintenance queries (after Tables.events' nanos→micros conversion,
-    * ts is a plain TimestampType).
-    */
-  private val splitEventsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("props", org.apache.spark.sql.types.StringType)))
-
   def incrementalAgg(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, 8) { graft.Tmp.withDir("graft_ck_incr") { ck =>
       import graft.Num._
@@ -580,7 +533,7 @@ object StreamingOps extends QueryModule {
       // stream construction/start inside the try: a start-time failure
       // must still delete the state dir
       try {
-        val q = spark.readStream.schema(splitEventsSchema)
+        val q = spark.readStream.schema(graft.Tables.schema(spark, src))
           .option("maxFilesPerTrigger", "2")
           .parquet(src)
           .writeStream
@@ -646,7 +599,7 @@ object StreamingOps extends QueryModule {
       }
       var current: Option[String] = None
       try {
-        val q = spark.readStream.schema(splitEventsSchema)
+        val q = spark.readStream.schema(graft.Tables.schema(spark, src))
           .option("maxFilesPerTrigger", "2")
           .parquet(src)
           .writeStream

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -34,30 +33,13 @@ class FanoutSpec extends SparkSpec {
   }
 
   test("fanout of a sub-threshold aggregated frame starts no Spark job") {
-    // built before listening: the parquet read infers its schema with a job
-    val agg = scanDf.groupBy("l_orderkey").agg(count(lit(1)).as("n"))
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
+    // the read, the aggregate and the gate all run inside the window
+    val jobs = jobsDuring {
+      val agg = scanDf.groupBy("l_orderkey").agg(count(lit(1)).as("n"))
       val out = Tables.fanout(agg)
       assert(out.queryExecution.optimizedPlan eq agg.queryExecution.optimizedPlan)
-      // the listener bus is asynchronous: a marker job posted after the
-      // call is seen last, so once it arrives every earlier job has too
-      sc.setJobDescription("fanout-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!started.contains("fanout-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.contains("fanout-marker"), "marker job never reached the listener")
-      val probeJobs = started.toArray.count(_ != "fanout-marker")
-      assert(probeJobs == 0, s"the fanout gate ran $probeJobs job(s) on a sub-threshold frame")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty, s"building and gating a sub-threshold frame ran ${jobs.size} job(s)")
   }
 
   test("fanout spreads a degenerate scan when the estimate clears the threshold") {

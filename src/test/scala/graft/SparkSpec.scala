@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +8,30 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Descriptions of the Spark jobs that `body` starts ("" when unset). */
+  def jobsDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the listener bus is asynchronous: a marker job posted after the
+      // body is seen last, so once it arrives every earlier job has too
+      sc.setJobDescription("jobs-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains("jobs-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains("jobs-marker"), "marker job never reached the listener")
+      started.toArray(Array.empty[String]).toSeq.filter(_ != "jobs-marker")
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
