@@ -20,7 +20,7 @@ object Plan {
     if (args(1) == "q351_forget_cascade" && args.length > 2 && args(2) == "fmt") {
       // same save/set/restore window Lifecycle.forgetCascade executes under
       ConfWindow.withConf(spark,
-        "spark.sql.constraintPropagation.enabled", "false") {
+        "spark.sql.constraintPropagation.enabled" -> "false") {
         val inner = ops.Lifecycle.forgetCascadePlan(
           Tables.customer(spark, args(0)), Tables.orders(spark, args(0)),
           Tables.lineitem(spark, args(0)), Tables.events(spark, args(0)))

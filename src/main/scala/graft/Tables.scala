@@ -17,9 +17,12 @@ object Tables {
     * footer of `path`, or of a directory's first data file in path order
     * (names starting `_` or `.` skipped); Spark's row metadata when the
     * writer left it, else the parquet schema converted under the session
-    * conf.
+    * conf. Sets `nanosAsLong` first: without it a TIMESTAMP(NANOS) footer
+    * (the driver corpus' events `ts`) fails to convert, and so does the
+    * scan that reads it.
     */
   def schema(spark: SparkSession, path: String): StructType = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path); val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
@@ -52,13 +55,12 @@ object Tables {
   /** The events table through `read` (a batch or stream reader, given
     * the footer schema) with `ts` as session TIMESTAMP, however the
     * corpus stores it: TIMESTAMP(NANOS) and the ScaleUp output's bigint
-    * nanos read as long (nanosAsLong is set before [[schema]] converts
-    * the footer; `ns div 1000` is lossless on micro-precision data),
+    * nanos read as long ([[schema]] sets nanosAsLong; `ns div 1000` is
+    * lossless on micro-precision data),
     * TIMESTAMP_MICROS reads as NTZ, and a Spark-written copy is TIMESTAMP.
     */
   private[graft] def readEvents(s: SparkSession, d: String)(
       read: StructType => DataFrame): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     val raw = read(schema(s, s"$d/events.parquet"))

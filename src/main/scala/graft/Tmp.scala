@@ -20,12 +20,23 @@ object Tmp {
     else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
   }
 
+  /** Every dir [[dir]] made that [[withDir]] has not removed yet. One
+    * shutdown hook removes them recursively at JVM exit: `deleteOnExit`
+    * is a no-op on a non-empty dir, so it would leave them all behind.
+    */
+  private[graft] val live = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+  sys.addShutdownHook(rmAll(live))
+
+  /** The exit hook's body: recursively remove each of `dirs`. */
+  private[graft] def rmAll(dirs: java.util.Set[java.io.File]): Unit =
+    dirs.forEach(d => rm(d))
+
   /** A fresh scratch dir on tmpfs when available (caller owns cleanup;
-    * deleteOnExit is registered for the dir itself as a backstop).
+    * the exit hook removes it with its contents as a backstop).
     */
   def dir(prefix: String): java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory(base, prefix)
-    d.toFile.deleteOnExit()
+    live.add(d.toFile)
     d
   }
 
@@ -35,7 +46,7 @@ object Tmp {
     */
   def withDir[T](prefix: String)(f: String => T): T = {
     val d = dir(prefix)
-    try f(d.toString) finally rm(d.toFile)
+    try f(d.toString) finally { rm(d.toFile); live.remove(d.toFile) }
   }
 
   def rm(f: java.io.File): Unit = {

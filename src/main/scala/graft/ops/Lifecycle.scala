@@ -187,7 +187,7 @@ object Lifecycle extends QueryModule {
     // query planned inside the window also loses constraint propagation
     // — plan-shape only, never results; the bench is sequential)
     graft.ConfWindow.withConf(customer.sparkSession,
-      "spark.sql.constraintPropagation.enabled", "false") {
+      "spark.sql.constraintPropagation.enabled" -> "false") {
       forgetCascadePlan(customer, orders, lineitem, events).localCheckpoint()
     }
   }

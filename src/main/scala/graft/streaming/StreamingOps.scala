@@ -1,81 +1,116 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import graft.{Q, QueryModule}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import graft.{ConfWindow, Q, QueryModule, Tables}
+import graft.Num.{dec, dsum}
 
 /** Structured-Streaming operators (SURVEY.md §1.4/§3.1): the engine's
   * streaming surface beyond the ingest pipeline — event-time windowed
-  * aggregation with watermark, and custom sessionization state via
-  * flatMapGroupsWithState. Queries run the stream AvailableNow over the
-  * events table (parquet file source) so results are deterministic; the
-  * windowed aggregation is oracle-checked against the same SQL as its
-  * batch twin (q16).
+  * aggregation with watermark, stream-stream and stream-static joins,
+  * dedup, transformWithState sessionization and foreachBatch table
+  * maintenance. Every stream query is a transform of the events frame
+  * plus a read-back, run by one AvailableNow runner ([[runStream]]),
+  * which owns the conf window, the checkpoint, the data-batch guard and
+  * the sink's cleanup; the results are deterministic and oracle-checked
+  * (the windowed aggregation shares its batch twin q16's SQL). The same
+  * transforms applied to the batch events table are [[batchTwins]].
   */
 object StreamingOps extends QueryModule {
 
   /** The events table as a file-source stream (the source needs a
     * directory, so it globs the one file). */
-  private def eventStream(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Tables.readEvents(spark, sfDir)(spark.readStream.schema(_)
+  private[streaming] def eventStream(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.readEvents(spark, sfDir)(spark.readStream.schema(_)
       .option("pathGlobFilter", "events.parquet").parquet(sfDir))
 
-  /** Run `f` with a transient shuffle-partition setting: streaming state
-    * stores are per-shuffle-partition (each micro-batch commits delta
-    * files for every partition of every store), so the partition count is
-    * a per-query sizing knob — match it to state volume, not to the
-    * session's batch default. At 100 TB it goes up, not down.
+  /** The data micro-batch count a stream query's result depends on, and
+    * what a run that misses it failed to show. */
+  private[streaming] final case class Batches(ok: Int => Boolean, why: Int => String)
+
+  /** At most one: a batch-oracle identity (q69, q84) holds only when the
+    * whole finite source lands in a single micro-batch. */
+  private val oneBatch = Batches(_ <= 1, n =>
+    s"source split into $n data micro-batches; the batch-oracle equivalence " +
+      "assumes a single AvailableNow batch (multi-file fixture? set " +
+      "maxFilesPerTrigger or drop the oracle)")
+
+  /** At least two: q88 and q95 exist to exercise per-batch maintenance. */
+  private val severalBatches = Batches(_ >= 2, n =>
+    s"expected multiple micro-batches over the split source, got $n — " +
+      "incrementality untested")
+
+  /** Run one stream query: `stream` to completion with AvailableNow, then
+    * `readBack` of where its rows landed, materialized while still inside
+    * the query's conf window. The sink is a memory table, whose name
+    * `readBack` receives, unless `eachBatch` is given: it then gets a
+    * per-run dir, writes each micro-batch there itself, and `readBack`
+    * receives that dir. The conf window:
+    *  - 8 shuffle partitions: state stores are per shuffle partition (each
+    *    micro-batch commits delta files for every partition of every
+    *    store), so the count is a per-query sizing knob matched to state
+    *    volume, not the session's batch default. At 100 TB it goes up.
+    *  - no-data micro-batches only when `finals`: they exist to advance
+    *    the watermark so append-mode WINDOW aggregations flush their final
+    *    windows and event-time timers fire. Every other query emits its
+    *    rows IN the data batch (complete mode re-emits everything;
+    *    dedup/join/transformWithState emit on arrival; foreachBatch runs
+    *    per data batch), so a trailing no-data batch would be a full
+    *    per-partition state-store commit cycle that produces nothing. Only
+    *    an append-mode windowed aggregation (q408) or a timer-based
+    *    processor sets `finals`.
+    * `guard` fails the run when its data-batch count misses what the
+    * result depends on. The memory table and the checkpoint dir (which
+    * holds the `eachBatch` dir) are removed however the run ends: a failed
+    * stream or read-back would otherwise leave the sink's rows pinned in
+    * driver memory for the session lifetime.
     */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val old = spark.conf.get(key)
-    val ndOld = spark.conf.getOption(ndKey)
-    spark.conf.set(key, n.toString)
-    // No-data micro-batches exist to advance the watermark so append-mode
-    // WINDOW aggregations flush their final windows and event-time timers
-    // fire. Every query in this module emits its rows IN the data batch
-    // (complete mode re-emits everything; dedup/join/transformWithState
-    // emit on arrival; foreachBatch runs per data batch), so the trailing
-    // no-data batch is a full per-partition state-store commit cycle that
-    // produces nothing — skip it. Any future append-mode windowed agg or
-    // timer-based processor must NOT run under this helper.
-    spark.conf.set(ndKey, "false")
-    try f finally {
-      spark.conf.set(key, old)
-      ndOld match {
-        case Some(v) => spark.conf.set(ndKey, v)
-        case None    => spark.conf.unset(ndKey)
+  private[streaming] def runStream(spark: SparkSession, label: String,
+      stream: => DataFrame, mode: OutputMode = OutputMode.Append(),
+      finals: Boolean = false, guard: Option[Batches] = None,
+      eachBatch: Option[String => (DataFrame, Long) => Unit] = None)(
+      readBack: String => DataFrame): DataFrame =
+    ConfWindow.withConf(spark, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> finals.toString) {
+      graft.Tmp.withDir(s"graft_ck_$label") { ck =>
+        val sink =
+          eachBatch.fold(s"graft_${label}_${System.nanoTime()}")(_ => s"$ck/sink")
+        try {
+          val w = stream.writeStream.outputMode(mode)
+          val q = eachBatch
+            .fold(w.format("memory").queryName(sink))(f => w.foreachBatch(f(sink)))
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          guard.foreach { g =>
+            val n = q.recentProgress.count(_.numInputRows > 0)
+            if (!g.ok(n)) throw new IllegalStateException(s"$label: ${g.why(n)}")
+          }
+          readBack(sink).localCheckpoint()
+        } finally if (eachBatch.isEmpty) spark.catalog.dropTempView(sink)
       }
     }
-  }
 
-  /** Event-time tumbling window + watermark, run to completion with
-    * AvailableNow into a memory sink (complete mode emits every window,
-    * so the result equals the batch q16 plan and shares its oracle).
+  /** Per-event-type count and exact value total. */
+  private def typeTotals(df: DataFrame): DataFrame = df.groupBy("event_type")
+    .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
+
+  /** q44's transform: 5-minute tumbling windows under a 10-minute
+    * watermark, keyed by the window start. */
+  private def windowTotals(ev: DataFrame): DataFrame = ev
+    .withWatermark("ts", "10 minutes")
+    .groupBy(window(col("ts"), "5 minutes").getField("start").as("bucket_start"))
+    .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
+
+  /** Event-time tumbling window + watermark, run to completion into a
+    * memory sink (complete mode emits every window, so the result equals
+    * the batch q16 plan and shares its oracle).
     */
-  def streamingWindow(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) { graft.Tmp.withDir("graft_ck_win") { ck =>
-    import graft.Num._
-    val name = s"graft_stream_win_${System.nanoTime()}"
-    val agg = eventStream(spark, sfDir)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes").getField("start").as("bucket_start"))
-      .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory").queryName(name)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // materialize the result, then drop the memory-sink table — otherwise
-    // every invocation retains its full result set in driver memory for
-    // the session lifetime
-    val res = spark.table(name).orderBy("bucket_start").localCheckpoint()
-    spark.catalog.dropTempView(name)
-    res
-  }}
+  def streamingWindow(spark: SparkSession, sfDir: String): DataFrame =
+    runStream(spark, "q44", windowTotals(eventStream(spark, sfDir)),
+      OutputMode.Complete())(spark.table(_).orderBy("bucket_start"))
 
   // shares q16's oracle: complete-mode streaming == batch on finite input
   private val streamingWindowOracle = """
@@ -183,68 +218,53 @@ object StreamingOps extends QueryModule {
       COUNT(*) AS n_events
     FROM s GROUP BY user_id, session_id ORDER BY user_id, session_start_us"""
 
-  /** Stream-stream inner join with event-time range bounds: purchases
-    * joined to the same user's errors from the preceding 5 minutes. Both
-    * sides carry watermarks and the join condition bounds each side's
-    * event time relative to the other, so Spark can size and expire the
-    * join state — the canonical watermarked interval-join pattern. Run
-    * AvailableNow over the finite events table, the inner join emits
-    * exactly the batch-equivalent pair set (deterministic ⇒ shares a
-    * DuckDB oracle).
+  /** q69's transform: purchases joined to the same user's errors from the
+    * preceding 5 minutes. `ev` is by-name: each side is its own read (in
+    * a stream, its own source). */
+  private def intervalJoin(ev: => DataFrame): DataFrame = {
+    val purchases = ev
+      .filter(col("event_type") === "purchase")
+      .select(col("event_id").as("p_event_id"), col("user_id"),
+        col("ts").as("p_ts"))
+      .withWatermark("p_ts", "10 minutes")
+    val errors = ev
+      .filter(col("event_type") === "error")
+      .select(col("event_id").as("e_event_id"),
+        col("user_id").as("e_user_id"), col("ts").as("e_ts"))
+      .withWatermark("e_ts", "10 minutes")
+    purchases.join(errors,
+      col("user_id") === col("e_user_id") &&
+        col("e_ts") >= col("p_ts") - expr("interval 5 minutes") &&
+        col("e_ts") <= col("p_ts"))
+      .select(col("p_event_id"), col("e_event_id"), col("user_id"),
+        unix_micros(col("p_ts")).as("p_ts_us"),
+        unix_micros(col("e_ts")).as("e_ts_us"))
+  }
+
+  /** Stream-stream inner join with event-time range bounds
+    * ([[intervalJoin]]). Both sides carry watermarks and the join
+    * condition bounds each side's event time relative to the other, so
+    * Spark can size and expire the join state — the canonical watermarked
+    * interval-join pattern. Run AvailableNow over the finite events
+    * table, the inner join emits exactly the batch-equivalent pair set
+    * (deterministic ⇒ shares a DuckDB oracle).
     *
     * Batch-equivalence caveat: the oracle identity holds only because the
     * whole finite source fits ONE micro-batch (the corpus is a single
     * events.parquet file and no maxFilesPerTrigger is set). Across
     * multiple batches the advancing 10-minute watermark could drop
     * cross-batch late pairs — correct streaming semantics, but a silent
-    * divergence from the batch oracle. Enforced below: a multi-batch run
-    * fails loudly instead of hash-mismatching.
+    * divergence from the batch oracle. Guarded: a multi-batch run fails
+    * loudly instead of hash-mismatching.
     */
   // Store choice measured at sf0.1: the HDFS-backed store wins here
   // (~3.2 s vs ~4.7 s on RocksDB — per-partition RocksDB instance-load
   // overhead dwarfs any benefit at this state size); q84 uses RocksDB
   // because transformWithState requires it, and at real state volumes
   // the disk-backed store is the right default anyway.
-  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) { graft.Tmp.withDir("graft_ck_ssj") { ck =>
-    val name = s"graft_ss_join_${System.nanoTime()}"
-    val purchases = eventStream(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_event_id"), col("user_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    val errors = eventStream(spark, sfDir)
-      .filter(col("event_type") === "error")
-      .select(col("event_id").as("e_event_id"),
-        col("user_id").as("e_user_id"), col("ts").as("e_ts"))
-      .withWatermark("e_ts", "10 minutes")
-    val joined = purchases.join(errors,
-      col("user_id") === col("e_user_id") &&
-        col("e_ts") >= col("p_ts") - expr("interval 5 minutes") &&
-        col("e_ts") <= col("p_ts"))
-    val q = joined
-      .select(col("p_event_id"), col("e_event_id"), col("user_id"),
-        unix_micros(col("p_ts")).as("p_ts_us"),
-        unix_micros(col("e_ts")).as("e_ts_us"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory").queryName(name)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // guard + materialize under finally: drop the memory-sink table even
-    // when the guard throws (otherwise the join result stays pinned in
-    // driver memory for the session lifetime)
-    try {
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      if (dataBatches > 1)
-        throw new IllegalStateException(
-          s"streamStreamJoin: source split into $dataBatches data micro-batches; " +
-            "the batch-oracle equivalence assumes a single AvailableNow batch " +
-            "(multi-file fixture? set maxFilesPerTrigger or drop the oracle)")
-      spark.table(name).orderBy("p_event_id", "e_event_id").localCheckpoint()
-    } finally spark.catalog.dropTempView(name)
-  }}
+  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
+    runStream(spark, "q69", intervalJoin(eventStream(spark, sfDir)),
+      guard = Some(oneBatch))(spark.table(_).orderBy("p_event_id", "e_event_id"))
 
   private val streamStreamJoinOracle = """
     SELECT p.event_id AS p_event_id, e.event_id AS e_event_id, p.user_id,
@@ -255,42 +275,33 @@ object StreamingOps extends QueryModule {
     WHERE p.event_type = 'purchase' AND e.event_type = 'error'
     ORDER BY p_event_id, e_event_id"""
 
-  /** Streaming deduplication: union two reads of the same source (every
-    * event arrives twice) and dropDuplicates on the event key — the
-    * stateful exactly-once-per-key operator a streaming ingest pipeline
-    * uses to absorb redelivery. Append the surviving rows to a memory
-    * sink and audit per-type counts in batch; duplicates fully removed ⇒
-    * equals the plain batch aggregate (shares its oracle shape).
+  /** q72's transform: every event arrives twice (`ev` is by-name, so a
+    * self-union of two reads) and dropDuplicates keeps one per key. */
+  private def dedup(ev: => DataFrame): DataFrame = ev.union(ev)
+    .select("event_id", "event_type", "value")
+    .dropDuplicates("event_id")
+
+  /** Streaming deduplication ([[dedup]]) — the stateful
+    * exactly-once-per-key operator a streaming ingest pipeline uses to
+    * absorb redelivery. Append the surviving rows to a memory sink and
+    * audit per-type counts in batch, aggregated down to 5 rows before the
+    * sink is dropped; duplicates fully removed ⇒ equals the plain batch
+    * aggregate (shares its oracle shape).
     */
-  def streamingDedup(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) { graft.Tmp.withDir("graft_ck_dd") { ck =>
-    val name = s"graft_stream_dedup_${System.nanoTime()}"
-    val twice = eventStream(spark, sfDir).union(eventStream(spark, sfDir))
-    val q = twice
-      .select("event_id", "event_type", "value")
-      .dropDuplicates("event_id")
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory").queryName(name)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    import graft.Num._
-    // aggregate down to 5 rows BEFORE dropping the memory-sink table: the
-    // sink holds the full deduped event set in driver memory otherwise
-    val res = spark.table(name)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
-      .orderBy("event_type")
-      .localCheckpoint()
-    spark.catalog.dropTempView(name)
-    res
-  }}
+  def streamingDedup(spark: SparkSession, sfDir: String): DataFrame =
+    runStream(spark, "q72", dedup(eventStream(spark, sfDir)))(t =>
+      typeTotals(spark.table(t)).orderBy("event_type"))
 
   private val streamingDedupOracle = """
     SELECT event_type, COUNT(*) AS n_events,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
     FROM events GROUP BY event_type ORDER BY event_type"""
+
+  /** q124's transform: [[dedup]] bounded by a 10-minute watermark. */
+  private def dedupWithinWatermark(ev: => DataFrame): DataFrame = ev.union(ev)
+    .withWatermark("ts", "10 minutes")
+    .select("event_id", "ts", "event_type", "value")
+    .dropDuplicatesWithinWatermark("event_id")
 
   /** Bounded-state streaming dedup: `dropDuplicatesWithinWatermark` keeps
     * a key in state only until the watermark passes it, where q72's plain
@@ -302,79 +313,34 @@ object StreamingOps extends QueryModule {
     * equals the batch distinct and shares q72's oracle shape.
     */
   def streamingDedupWatermark(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, 8) { graft.Tmp.withDir("graft_ck_ddwm") { ck =>
-      val name = s"graft_stream_dedup_wm_${System.nanoTime()}"
-      val twice = eventStream(spark, sfDir).union(eventStream(spark, sfDir))
-      val q = twice
-        .withWatermark("ts", "10 minutes")
-        .select("event_id", "ts", "event_type", "value")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      import graft.Num._
-      val res = spark.table(name)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
-        .orderBy("event_type")
-        .localCheckpoint()
-      spark.catalog.dropTempView(name)
-      res
-    }}
+    runStream(spark, "q124", dedupWithinWatermark(eventStream(spark, sfDir)))(t =>
+      typeTotals(spark.table(t)).orderBy("event_type"))
+
+  /** q408's transform: [[windowTotals]] grouped by the window() column
+    * itself — projecting .start inside the groupBy strips the event-time
+    * metadata and Spark rejects append mode as "aggregation without
+    * watermark". */
+  private def windowFinals(ev: DataFrame): DataFrame = ev
+    .withWatermark("ts", "10 minutes")
+    .groupBy(window(col("ts"), "5 minutes"))
+    .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
+    .select(col("window.start").as("bucket_start"),
+      col("n_events"), col("total_value"))
 
   /** Append-mode event-time window aggregation — the watermark-FINALS
     * semantic (each window emitted exactly once, when the watermark
     * passes its end), the production shape for downstream consumers
     * that must never see a result twice. This is the one query that
     * NEEDS the trailing no-data micro-batch (it advances the watermark
-    * past the closed windows and flushes them), so it runs under its
-    * own conf wrapper with no-data batches ON — the inverse of
-    * withStatePartitions' documented optimization. Windows still open
-    * at end-of-stream (end > max(ts) − delay) are intentionally never
-    * emitted; the oracle applies the same cutoff, pinning Spark's
-    * eviction boundary (window.end ≤ watermark) cross-engine.
+    * past the closed windows and flushes them), so it runs with `finals`
+    * on. Windows still open at end-of-stream (end > max(ts) − delay) are
+    * intentionally never emitted; the oracle applies the same cutoff,
+    * pinning Spark's eviction boundary (window.end ≤ watermark)
+    * cross-engine.
     */
-  def appendWindowFinals(spark: SparkSession, sfDir: String): DataFrame = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val oldP = spark.conf.get(pKey)
-    val oldNd = spark.conf.getOption(ndKey)
-    spark.conf.set(pKey, "8")
-    spark.conf.set(ndKey, "true")
-    try graft.Tmp.withDir("graft_ck_finals") { ck =>
-      import graft.Num._
-      val name = s"graft_stream_finals_${System.nanoTime()}"
-      // group by the window() column itself — projecting .start inside
-      // the groupBy strips the event-time metadata and Spark rejects
-      // append mode as "aggregation without watermark"
-      val agg = eventStream(spark, sfDir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "5 minutes"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
-        .select(col("window.start").as("bucket_start"),
-          col("n_events"), col("total_value"))
-      val q = agg.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val res = spark.table(name).orderBy("bucket_start").localCheckpoint()
-      spark.catalog.dropTempView(name)
-      res
-    } finally {
-      spark.conf.set(pKey, oldP)
-      oldNd match {
-        case Some(v) => spark.conf.set(ndKey, v)
-        case None    => spark.conf.unset(ndKey)
-      }
-    }
-  }
+  def appendWindowFinals(spark: SparkSession, sfDir: String): DataFrame =
+    runStream(spark, "q408", windowFinals(eventStream(spark, sfDir)),
+      finals = true)(spark.table(_).orderBy("bucket_start"))
 
   // finals = every window whose end the final watermark (max ts − delay)
   // passed; the open tail is never emitted, by design
@@ -436,69 +402,30 @@ object StreamingOps extends QueryModule {
     * transformWithState; also the scale-correct store — state lives
     * off-heap/on-disk per executor instead of on the JVM heap).
     */
-  def withRocksDb[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+  def withRocksDb[T](spark: SparkSession)(f: => T): T =
+    ConfWindow.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
+
+  /** q84's transform: each user's sessions through [[SessionizeProcessor]]
+    * with the open tail emitted. */
+  private def twsSessions(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.select(col("event_id"), unix_micros(col("ts")).as("ts"),
+        col("user_id"), col("value")).as[Ev]
+      .groupByKey(_.user_id)
+      .transformWithState(new SessionizeProcessor(emitOpenTail = true),
+        TimeMode.None(), OutputMode.Append())
+      .toDF()
+      .select(col("user_id"), col("session_start_us"), col("session_end_us"),
+        col("n_events"))
   }
 
   def twsSessionize(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, 8) { withRocksDb(spark) { graft.Tmp.withDir("graft_ck_tws") { ck =>
-      import spark.implicits._
-      val name = s"graft_tws_sess_${System.nanoTime()}"
-      val evs = eventStream(spark, sfDir)
-        .select(col("event_id"), unix_micros(col("ts")).as("ts"),
-          col("user_id"), col("value")).as[Ev]
-      val q = evs.groupByKey(_.user_id)
-        .transformWithState(new SessionizeProcessor(emitOpenTail = true),
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
-        .select(col("user_id"), col("session_start_us"), col("session_end_us"),
-          col("n_events"))
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // guard + materialize under finally: the memory-sink table must be
-      // dropped even when the guard throws, or the full result set stays
-      // pinned in driver memory for the session lifetime
-      try {
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        if (dataBatches > 1)
-          throw new IllegalStateException(
-            s"twsSessionize: $dataBatches data micro-batches; emitOpenTail " +
-              "oracle equivalence assumes a single AvailableNow batch")
-        spark.table(name)
-          .orderBy("user_id", "session_start_us").localCheckpoint()
-      } finally spark.catalog.dropTempView(name)
-    }}}
+    withRocksDb(spark) {
+      runStream(spark, "q84", twsSessions(eventStream(spark, sfDir)),
+        guard = Some(oneBatch))(spark.table(_).orderBy("user_id", "session_start_us"))
+    }
 
-  /** Incremental aggregation via foreachBatch — the streaming pattern
-    * for maintaining an aggregate table without reprocessing history:
-    * each micro-batch is aggregated DISTRIBUTED (map-side partials, one
-    * small result per batch), the per-batch partials are appended to a
-    * keyed parquet state location, and reading the aggregate is a cheap
-    * re-combine of partials (counts and decimal sums are associative, so
-    * partials-of-partials are exact — same algebra as Spark's own
-    * two-phase hash aggregate, persisted across batches). At 100 TB the
-    * append target is a MERGE-capable table and the re-combine is a
-    * compaction job; the algebra is unchanged.
-    *
-    * The source is a 4-file copy of the events table streamed with
-    * maxFilesPerTrigger=2, so the query REALLY runs 2+ incremental
-    * batches (asserted below — the inverse of q69's single-batch guard;
-    * 2 batches prove the partial-append algebra as well as 4 at half the
-    * fixed micro-batch overhead); the final combined aggregate equals
-    * the batch aggregate (oracle).
-    */
   private val splitDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Materialize the multi-file split source for `sfDir` ahead of time.
@@ -513,66 +440,73 @@ object StreamingOps extends QueryModule {
 
   private def splitEventsDir(spark: SparkSession, sfDir: String): String =
     splitDirs.computeIfAbsent(sfDir, _ => {
-      val dir = graft.Tmp.dir("graft_events_split")
-      graft.Tables.events(spark, sfDir).repartition(4)
-        .write.mode("overwrite").parquet(dir.toString)
-      // deleteOnExit on the dir alone is a no-op for non-empty dirs:
-      // register every written child too (LIFO deletion order empties
-      // the dir before removing it)
-      dir.toFile.deleteOnExit()
-      val listing = java.nio.file.Files.list(dir)
-      try listing.forEach(p => p.toFile.deleteOnExit()) finally listing.close()
-      dir.toString
+      val dir = graft.Tmp.dir("graft_events_split").toString
+      Tables.events(spark, sfDir).repartition(4)
+        .write.mode("overwrite").parquet(dir)
+      dir
     })
 
+  /** The split copy as a stream of two files per micro-batch. */
+  private def splitStream(spark: SparkSession, sfDir: String): DataFrame = {
+    val src = splitEventsDir(spark, sfDir)
+    spark.readStream.schema(Tables.schema(spark, src))
+      .option("maxFilesPerTrigger", "2")
+      .parquet(src)
+  }
+
+  /** q88's per-batch transform: per-type count and exact value partial. */
+  private def partials(ev: DataFrame): DataFrame = ev.groupBy("event_type")
+    .agg(count(lit(1)).as("n_events"),
+      sum(dec(col("value"), 2)).as("value_partial"))
+
+  /** Incremental aggregation via foreachBatch — the streaming pattern
+    * for maintaining an aggregate table without reprocessing history:
+    * each micro-batch is aggregated DISTRIBUTED (map-side partials, one
+    * small result per batch), the per-batch partials are appended to a
+    * keyed parquet state location, and reading the aggregate is a cheap
+    * re-combine of partials (counts and decimal sums are associative, so
+    * partials-of-partials are exact — same algebra as Spark's own
+    * two-phase hash aggregate, persisted across batches). At 100 TB the
+    * append target is a MERGE-capable table and the re-combine is a
+    * compaction job; the algebra is unchanged.
+    *
+    * The source is a 4-file copy of the events table streamed with
+    * maxFilesPerTrigger=2, so the query REALLY runs 2+ incremental
+    * batches (guarded — the inverse of q69's single-batch guard;
+    * 2 batches prove the partial-append algebra as well as 4 at half the
+    * fixed micro-batch overhead); the final combined aggregate equals
+    * the batch aggregate (oracle).
+    */
   def incrementalAgg(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, 8) { graft.Tmp.withDir("graft_ck_incr") { ck =>
-      import graft.Num._
-      val src = splitEventsDir(spark, sfDir)
-      val stateDir = graft.Tmp.dir("graft_incr_state")
-      // stream construction/start inside the try: a start-time failure
-      // must still delete the state dir
-      try {
-        val q = spark.readStream.schema(graft.Tables.schema(spark, src))
-          .option("maxFilesPerTrigger", "2")
-          .parquet(src)
-          .writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-            batch.groupBy("event_type")
-              .agg(count(lit(1)).as("n_events"),
-                sum(dec(col("value"), 2)).as("value_partial"))
-              .write.mode("append").parquet(stateDir.toString)
-            ()
-          }
-          .option("checkpointLocation", ck)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        if (dataBatches < 2)
-          throw new IllegalStateException(
-            s"incrementalAgg: expected multiple micro-batches over the split " +
-              s"source, got $dataBatches — incrementality untested")
-        spark.read.parquet(stateDir.toString)
-          .groupBy("event_type")
-          .agg(sum(col("n_events")).as("n_events"),
-            sum(col("value_partial")).cast("double").as("total_value"))
-          .orderBy("event_type")
-          .localCheckpoint()
-      } finally {
-        // partials are folded into the checkpointed result (or the run
-        // failed): drop the per-run state location either way
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(stateDir.toString), true)
-      }
-    }}
+    runStream(spark, "q88", splitStream(spark, sfDir), guard = Some(severalBatches),
+      eachBatch = Some(dir => (batch, _) =>
+        partials(batch).write.mode("append").parquet(dir)))(dir =>
+      spark.read.parquet(dir)
+        .groupBy("event_type")
+        .agg(sum(col("n_events")).as("n_events"),
+          sum(col("value_partial")).cast("double").as("total_value"))
+        .orderBy("event_type"))
 
   // totals over the whole stream == the plain batch aggregate
   private val incrementalAggOracle = """
     SELECT event_type, COUNT(*) AS n_events,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
     FROM events GROUP BY event_type ORDER BY event_type"""
+
+  /** q95's merge rule: each user's latest row by (ts_us, event_id). */
+  private def latestWins(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("user_id")
+      .orderBy(col("ts_us").desc, col("event_id").desc)
+    df.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
+  }
+
+  /** q95's per-batch transform: [[latestWins]] over the events in
+    * integer micros. */
+  private def latestEvents(ev: DataFrame): DataFrame =
+    latestWins(ev.select(col("user_id"), col("event_id"),
+      col("event_type"), unix_micros(col("ts")).as("ts_us"), col("value")))
 
   /** Keyed incremental upsert (CDC/SCD-1 latest-wins) — the OTHER
     * foreachBatch table-maintenance pattern next to q88's additive
@@ -586,52 +520,17 @@ object StreamingOps extends QueryModule {
     * final state over the finite split source equals the batch
     * latest-event-per-user query, q08's shape in integer micros.
     */
-  def incrementalUpsert(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, 8) { graft.Tmp.withDir("graft_ck_ups") { ck =>
-      import org.apache.spark.sql.expressions.Window
-      val src = splitEventsDir(spark, sfDir)
-      val stateDir = graft.Tmp.dir("graft_upsert_state")
-      def latestWins(df: DataFrame): DataFrame = {
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("ts_us").desc, col("event_id").desc)
-        df.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-      }
-      var current: Option[String] = None
-      try {
-        val q = spark.readStream.schema(graft.Tables.schema(spark, src))
-          .option("maxFilesPerTrigger", "2")
-          .parquet(src)
-          .writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-            val b = latestWins(batch.select(col("user_id"), col("event_id"),
-              col("event_type"), unix_micros(col("ts")).as("ts_us"),
-              col("value")))
-            val merged = current match {
-              case None    => b
-              case Some(p) => latestWins(spark.read.parquet(p).unionByName(b))
-            }
-            val next = s"$stateDir/v$id"
-            merged.write.mode("overwrite").parquet(next)
-            current = Some(next)
-            ()
-          }
-          .option("checkpointLocation", ck)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        if (dataBatches < 2)
-          throw new IllegalStateException(
-            s"incrementalUpsert: expected multiple micro-batches, got " +
-              s"$dataBatches — incrementality untested")
-        spark.read.parquet(current.get).orderBy("user_id").localCheckpoint()
-      } finally {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(stateDir.toString), true)
-      }
-    }}
+  def incrementalUpsert(spark: SparkSession, sfDir: String): DataFrame = {
+    var current: Option[String] = None
+    runStream(spark, "q95", splitStream(spark, sfDir), guard = Some(severalBatches),
+      eachBatch = Some(dir => (batch, id) => {
+        val b = latestEvents(batch)
+        val next = s"$dir/v$id"
+        current.fold(b)(p => latestWins(spark.read.parquet(p).unionByName(b)))
+          .write.mode("overwrite").parquet(next)
+        current = Some(next)
+      }))(_ => spark.read.parquet(current.get).orderBy("user_id"))
+  }
 
   // final upserted state == batch latest-event-per-user (q08 in micros)
   private val incrementalUpsertOracle = """
@@ -640,35 +539,26 @@ object StreamingOps extends QueryModule {
     QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
     ORDER BY user_id"""
 
-  /** Stream-static enrichment join: each micro-batch of the event stream
-    * probes a STATIC dimension (customer segments) via broadcast hash
-    * join — the standard streaming-enrichment shape (no state store, no
-    * watermark: the static side is re-resolvable per batch, so this
-    * composes with any downstream stateful op). Complete-mode windowless
-    * aggregation over AvailableNow equals the batch join+groupBy, which
-    * is the oracle.
+  /** q131's transform: events enriched with the customer segment by a
+    * broadcast join, totalled per (segment, type). */
+  private def enrich(ev: DataFrame, customer: DataFrame): DataFrame = ev
+    .join(broadcast(customer.select(col("c_custkey"), col("c_mktsegment"))),
+      col("user_id") === col("c_custkey"))
+    .groupBy("c_mktsegment", "event_type")
+    .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
+
+  /** Stream-static enrichment join ([[enrich]]): each micro-batch of the
+    * event stream probes a STATIC dimension (customer segments) via
+    * broadcast hash join — the standard streaming-enrichment shape (no
+    * state store, no watermark: the static side is re-resolvable per
+    * batch, so this composes with any downstream stateful op).
+    * Complete-mode windowless aggregation over AvailableNow equals the
+    * batch join+groupBy, which is the oracle.
     */
-  def streamEnrich(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) { graft.Tmp.withDir("graft_ck_enr") { ck =>
-    import graft.Num._
-    val name = s"graft_stream_enrich_${System.nanoTime()}"
-    val dim = graft.Tables.customer(spark, sfDir)
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = eventStream(spark, sfDir)
-      .join(broadcast(dim), col("user_id") === col("c_custkey"))
-      .groupBy("c_mktsegment", "event_type")
-      .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory").queryName(name)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = spark.table(name)
-      .orderBy("c_mktsegment", "event_type").localCheckpoint()
-    spark.catalog.dropTempView(name)
-    res
-  }}
+  def streamEnrich(spark: SparkSession, sfDir: String): DataFrame =
+    runStream(spark, "q131",
+      enrich(eventStream(spark, sfDir), Tables.customer(spark, sfDir)),
+      OutputMode.Complete())(spark.table(_).orderBy("c_mktsegment", "event_type"))
 
   private val streamEnrichOracle = """
     SELECT c_mktsegment, event_type, COUNT(*) AS n_events,
@@ -676,63 +566,32 @@ object StreamingOps extends QueryModule {
     FROM events JOIN customer ON user_id = c_custkey
     GROUP BY 1, 2 ORDER BY 1, 2"""
 
-  /** Batch twins of every streaming pipeline's TRANSFORM shape, for the
-    * static scale-hazard audit: the streaming queries themselves execute
-    * to completion when constructed (their returned frame is a
-    * checkpointed result the audit cannot see through), so PlanAuditSpec
-    * sweeps these instead — same projections/joins/windows/aggregations
-    * on the batch events table, only the source and the stateful
-    * plumbing differ. A corpus-wide flat window hiding inside a
-    * foreachBatch body or a pre-sink transform shows up here.
+  /** Batch twins of the streaming pipelines, for the static scale-hazard
+    * audit: the stream queries run to completion when built (their frame
+    * is a materialized read-back the audit cannot see through), so
+    * PlanAuditSpec sweeps these instead. Each twin applies the SAME
+    * transform function its stream query applies to the event stream, to
+    * the batch events table instead (a batch plan drops the watermark),
+    * so a twin cannot drift from its pipeline. A corpus-wide flat window
+    * hiding inside a foreachBatch body or a pre-sink transform shows up
+    * here. The audit only plans a twin: q84's would need the RocksDB
+    * provider to execute. q124 has none, as Spark rejects
+    * dropDuplicatesWithinWatermark on a batch frame (its plain-dedup
+    * sibling q72 is audited); q41/q51's enrichment/scoring twins are the
+    * registered q40/q42/q43 batch plans.
     */
   def batchTwins: Seq[(String, (SparkSession, String) => DataFrame)] = {
-    import graft.Num._
-    def events(s: SparkSession, d: String) = graft.Tables.events(s, d)
+    def twin(name: String)(f: (SparkSession, String) => DataFrame) = name -> f
+    def ev(s: SparkSession, d: String) = Tables.events(s, d)
     Seq(
-      ("q44_q408_window_agg", (s: SparkSession, d: String) =>
-        events(s, d)
-          .groupBy(window(col("ts"), "5 minutes").getField("start").as("bucket_start"))
-          .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))),
-      ("q72_q124_dedup", (s: SparkSession, d: String) =>
-        events(s, d).union(events(s, d))
-          .select("event_id", "event_type", "value")
-          .dropDuplicates("event_id")
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))),
-      ("q69_interval_join", (s: SparkSession, d: String) => {
-        val p = events(s, d).filter(col("event_type") === "purchase")
-          .select(col("event_id").as("p_event_id"), col("user_id"),
-            col("ts").as("p_ts"))
-        val e = events(s, d).filter(col("event_type") === "error")
-          .select(col("event_id").as("e_event_id"),
-            col("user_id").as("e_user_id"), col("ts").as("e_ts"))
-        p.join(e, col("user_id") === col("e_user_id") &&
-          col("e_ts") >= col("p_ts") - expr("interval 5 minutes") &&
-          col("e_ts") <= col("p_ts"))
-      }),
-      ("q131_enrich_join", (s: SparkSession, d: String) =>
-        events(s, d)
-          .join(broadcast(graft.Tables.customer(s, d)
-            .select(col("c_custkey"), col("c_mktsegment"))),
-            col("user_id") === col("c_custkey"))
-          .groupBy("c_mktsegment", "event_type")
-          .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))),
-      ("q88_batch_partial", (s: SparkSession, d: String) =>
-        events(s, d).groupBy("event_type")
-          .agg(count(lit(1)).as("n_events"),
-            sum(dec(col("value"), 2)).as("value_partial"))),
-      ("q95_latest_wins", (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("ts_us").desc, col("event_id").desc)
-        events(s, d).select(col("user_id"), col("event_id"),
-            col("event_type"), unix_micros(col("ts")).as("ts_us"), col("value"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-      }))
-    // q45/q84's fold twin is the registered q45 batch query (audited in
-    // the main sweep); q41/q51's enrichment/scoring twins are the
-    // registered q40/q42/q43 batch plans.
+      twin("q44_q408_window_agg")((s, d) => windowTotals(ev(s, d))),
+      twin("q408_window_finals")((s, d) => windowFinals(ev(s, d))),
+      twin("q72_q124_dedup")((s, d) => typeTotals(dedup(ev(s, d)))),
+      twin("q69_interval_join")((s, d) => intervalJoin(ev(s, d))),
+      twin("q84_tws_sessions")((s, d) => twsSessions(ev(s, d))),
+      twin("q131_enrich_join")((s, d) => enrich(ev(s, d), Tables.customer(s, d))),
+      twin("q88_batch_partial")((s, d) => partials(ev(s, d))),
+      twin("q95_latest_wins")((s, d) => latestEvents(ev(s, d))))
   }
 
   override def queries: Seq[Q] = Seq(

@@ -20,7 +20,7 @@ class FanoutSpec extends SparkSpec {
   }
 
   private def withMinBytes[A](v: Long)(body: => A): A =
-    ConfWindow.withConf(spark, "spark.graft.fanout.minBytes", v.toString)(body)
+    ConfWindow.withConf(spark, "spark.graft.fanout.minBytes" -> v.toString)(body)
 
   private def scanDf = Tables.lineitem(spark, sfDir)
     .select("l_orderkey", "l_partkey")

@@ -43,6 +43,37 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("a TIMESTAMP(NANOS) events table reads through Tables.t in a fresh session") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    val schema = MessageTypeParser.parseMessageType("""message events {
+      optional int64 event_id; optional int64 ts (TIMESTAMP(NANOS,false));
+      optional int64 user_id; optional binary event_type (STRING);
+      optional double value; optional binary props (STRING); }""")
+    val nanos = Seq(1700000000000000000L, 1700000000123456000L, 1700000060000001000L)
+    Tmp.withDir("graft_nanos_spec") { dir =>
+      val w = ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+        .withType(schema).build()
+      val rows = new SimpleGroupFactory(schema)
+      try nanos.zipWithIndex.foreach { case (ns, i) =>
+        w.write(rows.newGroup().append("event_id", i.toLong).append("ts", ns)
+          .append("user_id", 7L).append("event_type", "view")
+          .append("value", 1.5).append("props", "{}"))
+      } finally w.close()
+      // a fresh session has no nanosAsLong until Tables sets it
+      val t = Tables.t(SparkSpec.session.newSession(), dir, "events")
+      assert(t.schema("ts").dataType == LongType)
+      assert(t.orderBy("event_id").collect().map(_.getLong(1)).toSeq == nanos)
+      val ev = Tables.events(SparkSpec.session.newSession(), dir)
+      assert(ev.schema("ts").dataType == TimestampType)
+      assert(ev.orderBy("event_id").selectExpr("unix_micros(ts)").collect()
+        .map(_.getLong(0)).toSeq == nanos.map(_ / 1000))
+    }
+  }
+
   test("building every table loader starts no Spark job") {
     val sfDir = sf("sf0.001")
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir is not present")

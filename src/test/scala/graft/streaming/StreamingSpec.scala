@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
 /** Streaming operator tests: watermark windowing equivalence with the
-  * batch plan, and the flatMapGroupsWithState session machine driven as a
-  * real stream (memory source -> update mode).
+  * batch plan, the flatMapGroupsWithState session machine driven as a
+  * real stream (memory source -> update mode), and the AvailableNow
+  * runner leaving its session as found, on success and on failure.
   */
 class StreamingSpec extends SparkSpec {
 
@@ -120,6 +121,57 @@ class StreamingSpec extends SparkSpec {
     incr.foreach { r =>
       assert(r.getAs[Long]("n_events") == batch(r.getAs[String]("event_type")))
     }
+  }
+
+  private val runnerConfs = Seq("spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.streaming.stateStore.providerClass")
+
+  /** A fresh SQL session with a non-default shuffle-partition count. */
+  private def freshSession(): org.apache.spark.sql.SparkSession = {
+    val s = graft.SparkSpec.session.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    s
+  }
+  private def confs(s: org.apache.spark.sql.SparkSession) =
+    runnerConfs.map(s.conf.getOption)
+  private def sinkViews(s: org.apache.spark.sql.SparkSession) =
+    s.catalog.listTables().collect().toSeq
+      .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name)
+
+  test("every stream query leaves the session as found") {
+    val s = freshSession()
+    val before = confs(s)
+    val liveBefore = graft.Tmp.live.toArray.toSet
+    StreamingOps.queries.foreach(q => assert(q.run(s, sf("sf0.001")).count() > 0, q.name))
+    assert(sinkViews(s).isEmpty, "memory-sink views left behind")
+    assert(confs(s) == before)
+    // only the memoized split copy may outlive its query
+    val leftDirs = graft.Tmp.live.toArray.toSet -- liveBefore
+    assert(leftDirs.forall(_.toString.contains("graft_events_split")), leftDirs)
+  }
+
+  test("a failed guard or read-back still drops the sink view and restores the confs") {
+    val s = freshSession()
+    val before = confs(s)
+    val liveBefore = graft.Tmp.live.toArray.toSet
+    val failGuard = StreamingOps.Batches(_ => false, n => s"guard failed after $n")
+    val e1 = intercept[IllegalStateException] {
+      StreamingOps.runStream(s, "spec_guard", StreamingOps.eventStream(s, sf("sf0.001")),
+        guard = Some(failGuard))(s.table(_))
+    }
+    assert(e1.getMessage == "spec_guard: guard failed after 1")
+    val e2 = intercept[IllegalStateException] {
+      StreamingOps.runStream(s, "spec_read", StreamingOps.eventStream(s, sf("sf0.001"))) { t =>
+        assert(s.table(t).count() > 0, "the sink holds the stream's rows")
+        assert(s.conf.get("spark.sql.shuffle.partitions") == "8")
+        throw new IllegalStateException("read-back failed")
+      }
+    }
+    assert(e2.getMessage == "read-back failed")
+    assert(sinkViews(s).isEmpty, "memory-sink view left behind")
+    assert(confs(s) == before)
+    assert(graft.Tmp.live.toArray.toSet == liveBefore, "checkpoint dir left behind")
   }
 
   test("session state machine: gap splits, no gap merges, state persists") {
