@@ -46,7 +46,7 @@ object Demo {
     imagesDf.groupBy("label").agg(count(lit(1)).as("n")).orderBy("label")
       .collect().foreach(r => println(s"[demo] label=${r.get(0)} n=${r.get(1)}"))
     val model = ml.StreamScoring.trainOnImages(spark,
-      imagesDf.select("content", "label"))
+      imagesDf.select("statistics", "label"))
     ml.Scoring.logRun(spark, runs, "demo_run", 1.0, root.resolve("model").toString)
     println(s"[demo] trained; registered run=" +
       ml.Scoring.latestRun(spark, runs).collect()(0).getString(0))

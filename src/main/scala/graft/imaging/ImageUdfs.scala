@@ -3,7 +3,7 @@ package graft.imaging
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.types._
-import java.awt.image.BufferedImage
+import java.awt.image.{BufferedImage, DataBufferInt}
 
 /** The reference's UDF surface (SURVEY.md §2.8), registered by the same
   * names so `expr("get_image_metadata(content)")` works identically
@@ -49,40 +49,49 @@ object ImageUdfs {
     }
   }
 
+  private[imaging] val TensorSide = 224
+
+  /** `img` resized bilinearly to TensorSide x TensorSide TYPE_INT_RGB. */
+  private[imaging] def scaled(img: BufferedImage): BufferedImage = {
+    val out = new BufferedImage(TensorSide, TensorSide, BufferedImage.TYPE_INT_RGB)
+    val g = out.createGraphics()
+    g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+      java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+    g.drawImage(img, 0, 0, TensorSide, TensorSide, null)
+    g.dispose()
+    out
+  }
+
   /** M1 tensorizer: decode -> resize 224 bilinear -> /255 -> normalize
     * (mean=[.485,.456,.406], std=[.229,.224,.225]) -> CHW float array
     * (03a_Model Training.py:136-178). 224 is the training-side size; the
     * reference's serving path inconsistently uses 256 (SURVEY.md §7.4.6).
+    * Pixels are read from the scaled image's backing `int[]` (0x00RRGGBB,
+    * row-major): what `getRGB` returns on TYPE_INT_RGB, less its alpha byte.
+    * One pass per channel keeps the output writes sequential.
     */
   val tensorize: UDF1[Array[Byte], Array[Float]] = (bytes: Array[Byte]) => {
     if (bytes == null) null
     else ImageOps.decode(bytes) match {
       case None => null
       case Some(img) =>
-        val side = 224
-        val scaled = new BufferedImage(side, side, BufferedImage.TYPE_INT_RGB)
-        val g = scaled.createGraphics()
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, side, side, null)
-        g.dispose()
+        val px = scaled(img).getRaster.getDataBuffer.asInstanceOf[DataBufferInt].getData
+        val plane = TensorSide * TensorSide
         val mean = Array(0.485f, 0.456f, 0.406f)
         val std  = Array(0.229f, 0.224f, 0.225f)
-        val out = new Array[Float](3 * side * side)
-        var y = 0
-        while (y < side) {
-          var x = 0
-          while (x < side) {
-            val rgb = scaled.getRGB(x, y)
-            var c = 0
-            while (c < 3) {
-              val v = ((rgb >> (16 - 8 * c)) & 0xFF) / 255.0f
-              out(c * side * side + y * side + x) = (v - mean(c)) / std(c)
-              c += 1
-            }
-            x += 1
+        val out = new Array[Float](3 * plane)
+        var c = 0
+        while (c < 3) {
+          val shift = 16 - 8 * c
+          val m = mean(c)
+          val s = std(c)
+          val off = c * plane
+          var i = 0
+          while (i < plane) {
+            out(off + i) = (((px(i) >> shift) & 0xFF) / 255.0f - m) / s
+            i += 1
           }
-          y += 1
+          c += 1
         }
         out
     }

@@ -15,7 +15,7 @@ object MlQueries extends QueryModule {
     val src = graft.imaging.ImageQueries.sharedCorpusDir
     val out = graft.Tmp.dir("q51_out")
     val cp  = graft.Tmp.dir("q51_cp")
-    val labeled = graft.ingest.Ingest.batch(s, src.toString).select("content", "label")
+    val labeled = graft.ingest.Ingest.batch(s, src.toString).select("statistics", "label")
     val model = StreamScoring.trainOnImagesCached(s, labeled, src.toString)
     StreamScoring.scoreStream(s, model, src.toString, out.toString, cp.toString)
       .awaitTermination()

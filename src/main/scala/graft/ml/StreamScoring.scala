@@ -5,10 +5,11 @@ import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 import graft.imaging.ImageUdfs
 
 /** Entry point C (SURVEY.md §3.3): streaming inference. The binaryFile
-  * stream is enriched with the tensorize/statistics features and scored
+  * stream is enriched with the U2 statistics features and scored
   * by a broadcast MLlib model inside the task thread (no Arrow hop, no
   * Python worker — the Spark-native replacement for the reference's
   * pandas-UDF scoring, 04a_Model Deployment.py:231-268), then appended to
@@ -18,29 +19,31 @@ object StreamScoring {
 
   /** Feature vector for an image row: the U2 statistics means/stddevs —
     * the engine-extracted featurizer (SURVEY.md M2: frozen featurizer +
-    * trainable linear head).
+    * trainable linear head), read from the persisted U2 struct in `df`'s
+    * `statistics` column, which ingest writes once per image
+    * (02_Data Ingest.py:252-282), so a read of the ingest sink decodes no
+    * JPEG.
     */
-  def imageFeatures(spark: SparkSession, df: DataFrame): DataFrame = {
-    ImageUdfs.register(spark)
-    df.withColumn("statistics", expr("get_image_statistics(content)"))
-      .withColumn("features", array_to_vector(
-        concat(col("statistics.mean"),
-          col("statistics.stddev"),
-          array(col("statistics.entropy")))))
-  }
+  def imageFeatures(spark: SparkSession, df: DataFrame): DataFrame =
+    df.withColumn("features", array_to_vector(
+      concat(col("statistics.mean"),
+        col("statistics.stddev"),
+        array(col("statistics.entropy")))))
 
-  /** Train the scoring head on a batch of labeled images. The corpus is a
-    * handful of rows spread over one-file-per-partition binary scans —
-    * coalesce to 1 so each LR iteration runs 1 task instead of a
-    * per-file task wave (50 iterations x 24 tasks of scheduling overhead).
+  /** Train the scoring head on labeled images (`statistics`, `label`).
+    * LR reads its input twice (summarizer, then its cached blocks), so the
+    * 7-feature training frame is persisted for the fit and dropped after
+    * it (03a_Model Training.py:125-126), and `coalesce(1)` makes each LR
+    * iteration one task instead of a per-file task wave.
     */
   def trainOnImages(spark: SparkSession, labeled: DataFrame): LogisticRegressionModel = {
     val feats = imageFeatures(spark, labeled)
       .select(col("features"), col("label").cast("double").as("y"))
-      .coalesce(1)
-    new org.apache.spark.ml.classification.LogisticRegression()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try new org.apache.spark.ml.classification.LogisticRegression()
       .setFeaturesCol("features").setLabelCol("y").setMaxIter(50)
-      .fit(feats)
+      .fit(feats.coalesce(1))
+    finally feats.unpersist(blocking = false)
   }
 
   // The q51 pipeline trains on the JVM-fixed shared image corpus every
@@ -68,12 +71,14 @@ object StreamScoring {
   /** U3/S5: streaming scoring into the (path, score) parquet sink. */
   def scoreStream(spark: SparkSession, model: LogisticRegressionModel,
       srcDir: String, outDir: String, checkpointDir: String): StreamingQuery = {
+    ImageUdfs.register(spark)
     val src = spark.readStream
       .format("binaryFile")
       .schema(graft.imaging.ImageSchema.binaryFileSchema)
       .option("pathGlobFilter", "*.jpg")
       .option("recursiveFileLookup", "true")
       .load(srcDir)
+      .withColumn("statistics", expr("get_image_statistics(content)"))
     val scored = model.transform(imageFeatures(spark, src))
       .select(col("path"),
         element_at(vector_to_array(col("probability")), 2).as("score"))

@@ -111,6 +111,27 @@ class ImagingSpec extends SparkSpec {
     assert(t.forall(v => v > -3.0f && v < 3.0f))
   }
 
+  test("tensorize equals the per-pixel getRGB loop bit-for-bit on a noisy frame") {
+    val rnd = new scala.util.Random(7L)
+    val noisy = new java.awt.image.BufferedImage(97, 61, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 61; x <- 0 until 97) noisy.setRGB(x, y, rnd.nextInt(1 << 24))
+    val bytes = SyntheticImages.encode(noisy)
+    val img = ImageUdfs.scaled(ImageOps.decode(bytes).get)
+    val side = ImageUdfs.TensorSide
+    val mean = Array(0.485f, 0.456f, 0.406f)
+    val std  = Array(0.229f, 0.224f, 0.225f)
+    val want = new Array[Float](3 * side * side)
+    for (y <- 0 until side; x <- 0 until side; c <- 0 until 3) {
+      val v = ((img.getRGB(x, y) >> (16 - 8 * c)) & 0xFF) / 255.0f
+      want(c * side * side + y * side + x) = (v - mean(c)) / std(c)
+    }
+    val got = ImageUdfs.tensorize.call(bytes)
+    assert(got.length == want.length)
+    assert(got.indices.forall(i =>
+      java.lang.Float.floatToRawIntBits(got(i)) == java.lang.Float.floatToRawIntBits(want(i))))
+    assert(want.distinct.length > 100, "the frame is not noisy")
+  }
+
   test("exif schema: full public registry width, name-deduped struct fields") {
     // full TIFF 6.0 / EXIF 2.32 / DNG tag registry (PIL TAGS parity)
     assert(ExifTags.TAGS.size >= 245, s"TAGS=${ExifTags.TAGS.size}")

@@ -1,8 +1,10 @@
 package graft.ml
 
 import graft.SparkSpec
-import graft.imaging.ImageQueries
+import graft.imaging.{ImageQueries, ImageUdfs}
 import graft.ingest.Ingest
+import org.apache.spark.scheduler.SparkListenerStageCompleted
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -18,7 +20,7 @@ class StreamScoringSpec extends SparkSpec {
     val cp  = Files.createTempDirectory("score_cp")
     ImageQueries.writeCorpus(src)
 
-    val labeled = Ingest.batch(spark, src.toString).select("content", "label")
+    val labeled = Ingest.batch(spark, src.toString).select("statistics", "label")
     val model = StreamScoring.trainOnImages(spark, labeled)
 
     val q = StreamScoring.scoreStream(spark, model, src.toString, out.toString, cp.toString)
@@ -28,6 +30,52 @@ class StreamScoringSpec extends SparkSpec {
     assert(scored.columns.toSeq == Seq("path", "score"))
     assert(scored.count() == 24)
     assert(scored.filter(col("score") < 0 || col("score") > 1).count() == 0)
+  }
+
+  /** The 24-image corpus ingested by the streaming pipeline into a
+    * date-partitioned parquet sink (the `cv.images` table). */
+  private lazy val sink: String = {
+    val src = Files.createTempDirectory("sink_src")
+    val out = Files.createTempDirectory("sink_out").resolve("images").toString
+    ImageQueries.writeCorpus(src)
+    Ingest.stream(spark, src.toString, out,
+      Files.createTempDirectory("sink_cp").toString).awaitTermination()
+    out
+  }
+  private val corpusSize = 24
+
+  test("trainOnImages reads the ingest sink's rows in one stage") {
+    val sinkDf = spark.read.parquet(sink)
+    val stages = eventsDuring(StreamScoring.trainOnImages(spark, sinkDf))
+      .collect { case e: SparkListenerStageCompleted => e.stageInfo }
+    val reads = stages.filter(_.taskMetrics.inputMetrics.recordsRead == corpusSize)
+    assert(reads.size == 1, s"${reads.size} stages read all $corpusSize sink rows")
+  }
+
+  test("trainOnImages leaves the persisted RDDs as it found them") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    StreamScoring.trainOnImages(spark, spark.read.parquet(sink))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("imageFeatures over the ingest sink does not read the JPEG bytes") {
+    val df = StreamScoring.imageFeatures(spark, spark.read.parquet(sink)).select("features")
+    val scans = df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1)
+    assert(!scans.head.requiredSchema.fieldNames.contains("content"),
+      scans.head.requiredSchema.simpleString)
+  }
+
+  test("a model trained from the stored statistics equals one from recomputed statistics") {
+    ImageUdfs.register(spark)
+    val sinkDf = spark.read.parquet(sink)
+    val stored = StreamScoring.trainOnImages(spark, sinkDf.select("statistics", "label"))
+    val recomputed = StreamScoring.trainOnImages(spark,
+      sinkDf.withColumn("statistics", expr("get_image_statistics(content)"))
+        .select("statistics", "label"))
+    assert(stored.coefficients.toArray.sameElements(recomputed.coefficients.toArray),
+      s"${stored.coefficients} vs ${recomputed.coefficients}")
+    assert(stored.intercept == recomputed.intercept)
   }
 
   test("tf-idf pipeline runs over documents") {
