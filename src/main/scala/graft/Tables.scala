@@ -87,51 +87,35 @@ object Tables {
     * parquet split atom; byte-range splits of a one-group file read
     * nothing). This is guide §2.5's "one huge unsplittable file" input
     * skew: repartition right after the read, BEFORE the expensive
-    * projection. Scale-adaptive, not a local[32] constant: it
-    * repartitions ONLY when the scan yields fewer partitions than
-    * `defaultParallelism` (cores locally, executors×cores on a
-    * cluster); at production scale the scan has many splits and this is
-    * the identity. Project to the needed columns BEFORE calling (the
+    * projection. Project to the needed columns BEFORE calling (the
     * shuffle carries every column it is given, §2.3).
+    *
+    * One rule ([[shouldFan]]): fan out iff the optimizer's sizeInBytes
+    * estimate is at least 2 MB AND the frame has fewer partitions than
+    * `defaultParallelism` (cores locally, executors×cores on a cluster;
+    * at production split counts this alone makes fanout the identity).
     */
   def fanout(df: DataFrame): DataFrame =
     if (shouldFan(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
 
-  /** Fan out only when BOTH hold: the scan is degenerate (fewer
-    * partitions than defaultParallelism — at production split counts
-    * this alone makes fanout the identity) AND the input is big enough
-    * that single-task map work dominates the repartition's fixed costs
-    * (one extra exchange + a 32-task wave that AQE will not coalesce
-    * for a user repartition — measured ~+0.5-1 s per stage at sf0.1,
-    * where the whole text corpus is <1 MB and the map work ~0.1 s; at
-    * sf1, 7+ MB inputs, the same fanouts win 1.4-1.8×). The threshold
-    * compares the optimizer's sizeInBytes estimate — file bytes for a
-    * scan, scaled DOWN by schema-default column widths under a
-    * projection (measured: the 7 MB sf1 documents scan reads 3.0 MB at
-    * the (doc_id, text) shingle site, 0.25 MB at sf0.1) — against
-    * `spark.graft.fanout.minBytes`, default 2 MB: all measured
-    * regressing sites at sf0.1 sit below 0.6 MB and all winning sites
-    * at either SF above 2.2 MB. Orders of magnitude below any
-    * production scan, so it only distinguishes "trivially small local
-    * corpus" from "real input"; nothing here is tuned to a core count.
+  private val FanMinBytes = 2L * 1024 * 1024
+
+  /** The estimate is file bytes for a scan, scaled down by schema-default
+    * column widths under a projection; Spark 4 carries a scan's stats
+    * through `localCheckpoint`. The size gate keeps the repartition's
+    * fixed cost (one exchange + a task wave AQE will not coalesce for a
+    * user repartition) off inputs whose single-task map work is smaller:
+    * on the sf0.1 corpus all three sites estimate 0.25-0.40 MB and stay
+    * unfanned; on the ScaleUp ×10 corpus they fan 2 → 4 splits at
+    * local[4] and each wins (q235 3.9-4.5 → 2.2 s, q28 2.6-3.2 → 1.8 s,
+    * q27 7.0-7.2 → 5.3-6.0 s). The partition count is read only above
+    * the gate; `.rdd.getNumPartitions` plans the frame and starts no job,
+    * also over an aggregation under AQE (`FanoutSpec` pins both).
     */
-  private def shouldFan(df: DataFrame): Boolean = {
-    val sc = df.sparkSession.sparkContext
-    val minBytes = df.sparkSession.conf
-      .getOption("spark.graft.fanout.minBytes").map(_.toLong)
-      .getOrElse(2L * 1024 * 1024)
-    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // sizes at/near defaultSizeInBytes (Long.MaxValue) mean UNKNOWN —
-    // checkpointed/LogicalRDD inputs (e.g. q151's ~1.6k-row bucket
-    // tables) report that sentinel; they already carry their creation
-    // parallelism, so never fan them on a meaningless estimate.
-    // The size gate goes FIRST: under AQE `.rdd` runs every upstream
-    // shuffle stage, so probing the partition count of a sub-threshold
-    // aggregated frame would execute it once just to leave it alone.
-    size >= minBytes && size < BigInt(Long.MaxValue) / 4 &&
-      df.rdd.getNumPartitions < sc.defaultParallelism
-  }
+  private def shouldFan(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes >= FanMinBytes &&
+      df.rdd.getNumPartitions < df.sparkSession.sparkContext.defaultParallelism
 }
 
 /** Shared numeric helpers for DuckDB-oracle bit-exactness.

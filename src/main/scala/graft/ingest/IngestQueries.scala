@@ -15,22 +15,14 @@ import graft.Num._
   */
 object IngestQueries extends QueryModule {
 
-  private val tables = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // sfDir-keyed (warm and timed passes never shared an entry); cleared
-  // between Bench passes anyway via graft.Memos.reset — the timed q416
-  // then stages + commits its table inside its own timed region.
-  private[graft] def resetMemo(): Unit = tables.clear()
-
-  private def committedTable(spark: SparkSession, sfDir: String): String =
-    tables.computeIfAbsent(sfDir, _ => {
-      val dir = graft.Tmp.dir("graft_atomic_tbl").toString + "/orders"
-      val o = graft.Tables.orders(spark, sfDir)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      AtomicSink.commit(o.filter(col("o_orderstatus") === "O"), dir)
-      AtomicSink.commit(o.filter(col("o_orderstatus") === "F"), dir)
-      dir
-    })
+  private def committedTable(spark: SparkSession, sfDir: String): String = {
+    val dir = graft.Tmp.dir("graft_atomic_tbl").toString + "/orders"
+    val o = graft.Tables.orders(spark, sfDir)
+      .select("o_orderkey", "o_orderstatus", "o_totalprice")
+    AtomicSink.commit(o.filter(col("o_orderstatus") === "O"), dir)
+    AtomicSink.commit(o.filter(col("o_orderstatus") === "F"), dir)
+    dir
+  }
 
   def atomicSnapshots(spark: SparkSession, sfDir: String): DataFrame = {
     val table = committedTable(spark, sfDir)

@@ -16,7 +16,7 @@ object MlQueries extends QueryModule {
     val out = graft.Tmp.dir("q51_out")
     val cp  = graft.Tmp.dir("q51_cp")
     val labeled = graft.ingest.Ingest.batch(s, src.toString).select("statistics", "label")
-    val model = StreamScoring.trainOnImagesCached(s, labeled, src.toString)
+    val model = StreamScoring.trainOnImages(s, labeled)
     StreamScoring.scoreStream(s, model, src.toString, out.toString, cp.toString)
       .awaitTermination()
     s.read.parquet(out.toString).orderBy("path")

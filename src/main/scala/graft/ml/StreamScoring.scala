@@ -46,28 +46,6 @@ object StreamScoring {
     finally feats.unpersist(blocking = false)
   }
 
-  // The q51 pipeline trains on the JVM-fixed shared image corpus every
-  // invocation; the fit is deterministic on that read-only input, so the
-  // coefficient vector is memoized per source dir (driver-side state
-  // only). Because q51's corpus is the SHARED FIXTURE dir (not the
-  // bench's sfDir), a warm-pass invocation would otherwise populate the
-  // entry the timed pass reuses — moving the fit out of the timed
-  // region (the r12 verdict's gaming finding). Bench now clears this
-  // cache between its warm and timed passes via [[graft.Memos.reset]],
-  // so the timed q51 always pays for its own fit; within one pass the
-  // memo still deduplicates repeated invocations. The streaming score
-  // itself is never cached: every run replays the sink + checkpoint
-  // from scratch.
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[String, LogisticRegressionModel]
-
-  private[graft] def resetMemo(): Unit = modelCache.clear()
-
-  /** [[trainOnImages]] memoized per corpus dir. */
-  def trainOnImagesCached(spark: SparkSession, labeled: DataFrame,
-      srcDir: String): LogisticRegressionModel =
-    modelCache.getOrElseUpdate(srcDir, trainOnImages(spark, labeled))
-
   /** U3/S5: streaming scoring into the (path, score) parquet sink. */
   def scoreStream(spark: SparkSession, model: LogisticRegressionModel,
       srcDir: String, outDir: String, checkpointDir: String): StreamingQuery = {

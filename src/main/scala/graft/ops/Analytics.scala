@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -165,7 +165,7 @@ object Analytics extends QueryModule {
     * partitioning-independent (the oracle unrolls the same three steps
     * as CTEs with the same ordered fold).
     */
-  def tradePageRank(spark: SparkSession, li: DataFrame, orders: DataFrame,
+  def tradePageRank(li: DataFrame, orders: DataFrame,
       supplier: DataFrame, customer: DataFrame, nation: DataFrame): DataFrame = {
     val edges = li.select(col("l_suppkey"), col("l_orderkey"))
       .join(orders.select(col("o_orderkey"), col("o_custkey")),
@@ -3006,7 +3006,7 @@ object Analytics extends QueryModule {
     Q("q134_activity_islands",
       (s, d) => activityIslands(events(s, d)), Some(islandsOracle)),
     Q("q133_trade_pagerank",
-      (s, d) => tradePageRank(s, lineitem(s, d), orders(s, d),
+      (s, d) => tradePageRank(lineitem(s, d), orders(s, d),
         supplier(s, d), customer(s, d), nation(s, d)), Some(pageRankOracle)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -78,7 +78,7 @@ object Governance extends QueryModule {
     * every share is an exact integer ppm quotient, so the EMD is an
     * exact integer on both engines. Gate: emd_ppm <= 150000 (t = 0.15).
     */
-  def tCloseness(spark: SparkSession, events: DataFrame): DataFrame = {
+  def tCloseness(events: DataFrame): DataFrame = {
     val c = events
       .select(col("event_type").as("et"),
         dayofweek(col("ts")).cast("long").as("dw"),
@@ -301,7 +301,7 @@ object Governance extends QueryModule {
     Q("q324_l_diversity",
       (s, d) => lDiversity(events(s, d)), Some(lDiversityOracle)),
     Q("q325_t_closeness",
-      (s, d) => tCloseness(s, events(s, d)), Some(tClosenessOracle)),
+      (s, d) => tCloseness(events(s, d)), Some(tClosenessOracle)),
     Q("q326_bloom_blocklist",
       (s, d) => bloomBlocklist(customer(s, d)), Some(bloomOracle)),
   )

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, QueryModule}
-import graft.Num._
 import graft.Tables._
 
 /** Distribution-level causal/robustness inference, round 8 of the

@@ -44,8 +44,6 @@ object Lifecycle extends QueryModule {
     * the corpus: it is a rank filter over distinct hashes.
     */
   def kmvDistinct(events: DataFrame, k: Int = 32): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
     val hashed = events.select(col("event_type"), col("user_id"))
       .distinct()
       .withColumn("h", hv("user_id"))

@@ -168,7 +168,6 @@ object Placement extends QueryModule {
     */
   def hashRing(docs: DataFrame, vnodes: Int = 16): DataFrame = {
     val s = docs.sparkSession
-    import s.implicits._
     // positions need a MIXING hash: a linear lattice ((n+1)A + (v+1)B
     // mod p) clusters low on the ring and the wraparound arc swallows
     // most keys — the portable md5 ascii-fold spreads uniformly

@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.{Q, QueryModule}
 import graft.Tables._
 import graft.Num._
@@ -316,7 +315,7 @@ object Relational extends QueryModule {
     * exactly the fixed-prefix+user+fixed-suffix shape. The raw value is
     * pinned by OperatorSpec instead.
     */
-  def sessionProvenance(spark: SparkSession, orders: DataFrame): DataFrame = {
+  def sessionProvenance(orders: DataFrame): DataFrame = {
     val u = expr("current_user()")
     val mount = concat(lit("/users/"), u, lit("/images"))
     orders.agg(count(lit(1)).as("n_orders"))
@@ -790,7 +789,7 @@ object Relational extends QueryModule {
     Q("q13_base64_codec",
       (s, d) => base64Codec(documents(s, d)), Some(base64Oracle)),
     Q("q203_session_provenance",
-      (s, d) => sessionProvenance(s, orders(s, d)), Some(provenanceOracle)),
+      (s, d) => sessionProvenance(orders(s, d)), Some(provenanceOracle)),
     Q("q14_distinct_counts",
       (s, d) => distinctCounts(lineitem(s, d)), Some(distinctOracle)),
     Q("q15_price_percentiles",

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, QueryModule}
@@ -319,7 +319,7 @@ object Scale extends QueryModule {
     * few KB per partition merged once — the recount join touches only
     * the screened keys.
     */
-  def cmsHeavyParts(spark: SparkSession, lineitem: DataFrame,
+  def cmsHeavyParts(lineitem: DataFrame,
       minShare: Double = 0.0001): DataFrame = {
     import org.apache.spark.sql.functions.{count_min_sketch, lit => flit}
     val agg = lineitem.agg(
@@ -444,7 +444,7 @@ object Scale extends QueryModule {
     Q("q188_systematic_sample",
       (s, d) => systematicSample(documents(s, d)), Some(systematicOracle)),
     Q("q181_cms_heavy",
-      (s, d) => cmsHeavyParts(s, lineitem(s, d)), Some(cmsHeavyOracle)),
+      (s, d) => cmsHeavyParts(lineitem(s, d)), Some(cmsHeavyOracle)),
     Q("q144_ivm_merge",
       (s, d) => ivmMerge(orders(s, d)), Some(ivmOracle)),
     Q("q143_kfold_splits",

@@ -37,8 +37,6 @@ object Supervision extends QueryModule {
     * (abstain-excluded; ties → no majority).
     */
   def labelingFunctions(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
     val voted = docs.select(col("doc_id"),
         when(col("text").contains("table"), 1L).as("v1"),
         when(col("n_chars") > 180, 1L)

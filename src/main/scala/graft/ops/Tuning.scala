@@ -34,7 +34,6 @@ object Tuning extends QueryModule {
     */
   def blockingSweep(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
-    import s.implicits._
     val keyed = docs.select(col("doc_id"), col("n_chars"),
         md5(col("text").cast("binary")).as("h"))
       .withColumn("r", row_number().over(

@@ -30,8 +30,6 @@ object Warehouse extends QueryModule {
     */
   def dataContract(li: DataFrame, orders: DataFrame,
       customer: DataFrame): DataFrame = {
-    val s = li.sparkSession
-    import s.implicits._
     val nullCheck = li.agg(count(lit(1)).as("n"),
       sum(col("l_shipdate").isNull.cast("long")).as("v"))
       .select(lit("lineitem.shipdate_not_null").as("check"),
@@ -199,8 +197,6 @@ object Warehouse extends QueryModule {
     * from the 1-row aggregate.
     */
   def selectivityAudit(li: DataFrame): DataFrame = {
-    val s = li.sparkSession
-    import s.implicits._
     val preds = Seq(
       "qty_gt_25" -> (col("l_quantity") > 25),
       "disc_gt_05" -> (col("l_discount") > 0.05),

@@ -605,7 +605,6 @@ object CorpusAudit extends QueryModule {
     */
   def rboOverlap(docs: DataFrame, depth: Int = 20, p: Double = 0.9): DataFrame = {
     val s = docs.sparkSession
-    import s.implicits._
     val two = docs.select(col("source")).distinct().orderBy("source").limit(2)
       .collect().map(_.getString(0))
     val ranked = docs.filter(col("source").isin(two.toSeq: _*))

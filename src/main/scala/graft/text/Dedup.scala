@@ -92,6 +92,21 @@ object Dedup extends QueryModule {
             || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])) AS shs
       FROM documents WHERE len(string_split(text,' ')) >= 4"""
 
+  /** (doc_id, text) of the docs that have at least one 4-word shingle,
+    * fanned out for a CPU-heavy per-doc shingle pass. The guard runs on
+    * the RAW text: size(split(text, ' ')) >= 4 is exactly the
+    * tokens-length gate of both WordShingles(n = 4) and MinHashSig (same
+    * limit -1 split semantics), so it drops exactly the docs whose
+    * shingle set would be empty. A filter on the shingle function's own
+    * output (n_sh > 0, size(sig) > 0) was pushed below the projection
+    * with the function SUBSTITUTED into it, so every doc paid the pass
+    * twice (guide §4.4 duplicated evaluation). fanout: the pass otherwise
+    * runs as ONE task on the one-row-group driver corpus (§2.5).
+    */
+  private def shingleable(docs: DataFrame): DataFrame =
+    graft.Tables.fanout(docs.select(col("doc_id"), col("text"))
+      .filter(size(split(col("text"), " ")) >= 4))
+
   /** Exploded shingle postings (doc_id, n_sh, shid): one native
     * shingle-hash pass (WordShingles — ids serve only as join keys, so an
     * injective-in-practice 64-bit hash preserves pair counts),
@@ -103,14 +118,6 @@ object Dedup extends QueryModule {
     */
   private def shinglePostings(docs: DataFrame): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    // No-shingle guard on the RAW text (size(split) >= 4 is exactly
-    // WordShingles' tokens-length gate — same limit -1 split semantics):
-    // the former filter(n_sh > 0) was pushed below the projection with
-    // word_shingles SUBSTITUTED into it (guide §4.4 duplicated
-    // evaluation; the explode already dropped empty-shingle docs, so
-    // the row set is unchanged three ways). fanout: the shingle hashing
-    // + explode + checkpoint otherwise run as ONE task on the
-    // one-row-group driver corpus (§2.5).
     // explode_OUTER: a plain explode triggers InferFiltersFromGenerate,
     // which re-derives `size(shs) > 0` and pushes it below the fanout
     // exchange with word_shingles substituted in — re-creating the §4.4
@@ -118,9 +125,7 @@ object Dedup extends QueryModule {
     // guarantees ≥1 shingle per row, so outer ≡ inner row-for-row here
     // (no null-shid rows can appear) and the inference rule does not
     // apply to outer generates.
-    graft.Tables.fanout(
-        docs.select(col("doc_id"), col("text"))
-          .filter(size(split(col("text"), " ")) >= 4))
+    shingleable(docs)
       .select(col("doc_id"), word_shingles(col("text"), 4).as("shs"))
       .withColumn("n_sh", size(col("shs")).cast("long"))
       .select(col("doc_id"), col("n_sh"), explode_outer(col("shs")).as("shid"))
@@ -196,21 +201,11 @@ object Dedup extends QueryModule {
     // per document, md5 hex halves read straight from digest bytes —
     // bit-identical to the SQL/DuckDB formulation of the same family.
     import graft.functions.MinHashSig.minhash_sig
-    // The no-shingle guard runs on the RAW text: size(split(text,' '))
-    // >= 4 is exactly MinHashSig's own tokens-length gate (same
-    // limit -1 split semantics), so dropped docs are identical — while
-    // the former filter(size(sig) > 0) was pushed below the projection
-    // with minhash_sig SUBSTITUTED into it, i.e. every doc paid the
-    // md5-per-shingle signature TWICE (guide §4.4 duplicated
-    // evaluation). The signature table is then localCheckpoint()ed:
-    // both sides of the band self-join consume it, so signatures are
-    // computed ONCE per invocation, not once per join side (sig rows
-    // are |docs| × (12 longs + id) — ~5 MB at sf1).
-    // fanout: the md5-per-shingle signature pass otherwise runs as ONE
-    // task on the one-row-group driver corpus (§2.5)
-    val sigs = graft.Tables.fanout(
-        docs.select(col("doc_id"), col("text"))
-          .filter(size(split(col("text"), " ")) >= 4))
+    // The signature table is localCheckpoint()ed: both sides of the band
+    // self-join consume it, so signatures are computed ONCE per
+    // invocation, not once per join side (sig rows are |docs| × (12
+    // longs + id) — ~5 MB at sf1).
+    val sigs = shingleable(docs)
       .select(col("doc_id"), minhash_sig(col("text"), 12).as("sig"))
       .localCheckpoint()
     val bands = sigs.select(col("doc_id"), col("sig"),

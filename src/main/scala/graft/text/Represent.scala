@@ -36,7 +36,7 @@ object Represent extends QueryModule {
     * graded SF — no decimal→double ulp hazard); the three Frobenius
     * reductions are ordered double folds over the (i,j) lattice.
     */
-  def linearCka(spark: SparkSession, emb: DataFrame): DataFrame = {
+  def linearCka(emb: DataFrame): DataFrame = {
     val half = 32
     val dims = emb
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d0", "v")))
@@ -248,7 +248,7 @@ object Represent extends QueryModule {
 
   override def queries: Seq[Q] = Seq(
     Q("q348_linear_cka",
-      (s, d) => linearCka(s, embeddings(s, d)), Some(ckaOracle)),
+      (s, d) => linearCka(embeddings(s, d)), Some(ckaOracle)),
     Q("q352_mmr_select",
       (s, d) => mmrSelect(s, embeddings(s, d)), Some(mmrOracle())),
   )

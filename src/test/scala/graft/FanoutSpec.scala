@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Tables.fanout gate logic: repartition fires only for a degenerate
-  * (fewer-partitions-than-parallelism) scan whose size estimate is both
-  * KNOWN and at least spark.graft.fanout.minBytes, and a sub-threshold
-  * input is decided without running anything. Uses its own SQL session
-  * (a `newSession()` of the shared context) so the minBytes conf and
-  * tiny-threshold experiments cannot leak into other suites.
+/** Tables.fanout's one rule: repartition fires only for a frame with
+  * fewer partitions than defaultParallelism whose size estimate is at
+  * least 2 MB, and the decision itself never runs a Spark job. Uses its
+  * own SQL session (a `newSession()` of the shared context) so nothing
+  * set here leaks into other suites.
   */
 class FanoutSpec extends SparkSpec {
   override lazy val spark: SparkSession = SparkSpec.session.newSession()
@@ -19,14 +18,17 @@ class FanoutSpec extends SparkSpec {
     super.withFixture(test)
   }
 
-  private def withMinBytes[A](v: Long)(body: => A): A =
-    ConfWindow.withConf(spark, "spark.graft.fanout.minBytes" -> v.toString)(body)
-
   private def scanDf = Tables.lineitem(spark, sfDir)
     .select("l_orderkey", "l_partkey")
 
+  // one partition, and an estimate far above the 2 MB gate
+  private def bigDf = spark.range(0, 2000000, 1, 1).toDF()
+
+  private def estimate(df: DataFrame) =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
   test("fanout is the identity below the size threshold") {
-    val df = scanDf // sf0.001 lineitem is ~100 kB — far below the default 2 MB
+    val df = scanDf // sf0.001 lineitem is ~100 kB — far below the 2 MB gate
     val out = Tables.fanout(df)
     assert(out.queryExecution.optimizedPlan eq df.queryExecution.optimizedPlan,
       "sub-threshold input must come back untouched")
@@ -43,21 +45,26 @@ class FanoutSpec extends SparkSpec {
   }
 
   test("fanout spreads a degenerate scan when the estimate clears the threshold") {
-    withMinBytes(1L) {
-      val out = Tables.fanout(scanDf)
-      assert(out.rdd.getNumPartitions ==
-        spark.sparkContext.defaultParallelism,
-        "above-threshold degenerate scan must fan to defaultParallelism")
-    }
+    assert(estimate(bigDf) >= 2L * 1024 * 1024 && bigDf.rdd.getNumPartitions == 1)
+    val out = Tables.fanout(bigDf)
+    assert(out.rdd.getNumPartitions == spark.sparkContext.defaultParallelism,
+      "above-threshold degenerate scan must fan to defaultParallelism")
+  }
+
+  test("an above-threshold aggregated frame is decided without a Spark job") {
+    val agg = bigDf.groupBy((col("id") % 1000).as("k")).agg(count(lit(1)).as("n"))
+    assert(estimate(agg) >= 2L * 1024 * 1024)
+    // the partition probe plans the aggregation under AQE; it must not
+    // run its shuffle map stage
+    val jobs = jobsDuring(Tables.fanout(agg))
+    assert(jobs.isEmpty, s"gating an above-threshold aggregate ran ${jobs.size} job(s)")
   }
 
   test("tiny checkpointed inputs are not fanned under the default threshold") {
     // Spark 4's LogicalRDD propagates ORIGIN stats through
     // localCheckpoint, so a small checkpointed frame (q151's ~1.6k-row
     // bucket tables) estimates small and stays untouched under the
-    // default 2 MB gate; the Long.MaxValue/4 sentinel guard in
-    // shouldFan additionally covers RDD-backed frames without origin
-    // stats.
+    // 2 MB gate.
     val ck = scanDf.limit(50).localCheckpoint()
     try {
       val out = Tables.fanout(ck)
@@ -67,13 +74,8 @@ class FanoutSpec extends SparkSpec {
   }
 
   test("fanout preserves the exact row multiset") {
-    withMinBytes(1L) {
-      val base = scanDf
-      val a = base.groupBy("l_orderkey").agg(sum("l_partkey").as("s"))
-        .orderBy("l_orderkey").collect()
-      val b = Tables.fanout(base).groupBy("l_orderkey")
-        .agg(sum("l_partkey").as("s")).orderBy("l_orderkey").collect()
-      assert(a.sameElements(b))
-    }
+    def sums(df: DataFrame) =
+      df.groupBy((col("id") % 1000).as("k")).agg(sum("id").as("s")).orderBy("k").collect()
+    assert(sums(bigDf).sameElements(sums(Tables.fanout(bigDf))))
   }
 }

@@ -97,7 +97,6 @@ class IngestSpec extends SparkSpec {
   }
 
   test("manifest-swap commit: readers never see a torn commit; versions time-travel") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val table = Files.createTempDirectory("atomic_sink").toString + "/t"
     // v1: two rows

@@ -6,8 +6,6 @@ import graft.SparkSpec
 class Batch16Spec extends SparkSpec {
   import spark.implicits._
 
-  private val ts = (s: String) => java.sql.Timestamp.valueOf(s)
-
   test("blockingSweep: recall is monotone in window and hits 1 for adjacent dups") {
     // duplicate texts share n_chars so they sort adjacent: window 2
     // must already catch every pair

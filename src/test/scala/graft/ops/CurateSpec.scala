@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions._
 
 /** Laws for the curation-selection operators: PageRank mass
   * conservation, influence decomposition, greedy coverage monotonicity,

@@ -37,7 +37,7 @@ class GovernanceSpec extends SparkSpec {
       (2L, "2024-01-01 11:00:00", 5L, "view"),
       (3L, "2024-01-02 10:00:00", 10L, "click"), // bucket 0
       (4L, "2024-01-02 11:00:00", 15L, "click")) // bucket 5
-    val r = Governance.tCloseness(spark, ev(rows)).collect()
+    val r = Governance.tCloseness(ev(rows)).collect()
     assert(r.forall(_.getAs[Long]("emd_ppm") == 0L))
     assert(r.forall(_.getAs[Long]("t_fail") == 0L))
   }

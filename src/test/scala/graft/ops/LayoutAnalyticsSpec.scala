@@ -102,7 +102,7 @@ class LayoutAnalyticsSpec extends SparkSpec {
 
   test("pagerank ranks are bounded and nodes with inflow exceed the base") {
     val d = sf("sf0.001")
-    val pr = Analytics.tradePageRank(spark, Tables.lineitem(spark, d),
+    val pr = Analytics.tradePageRank(Tables.lineitem(spark, d),
       Tables.orders(spark, d), Tables.supplier(spark, d),
       Tables.customer(spark, d), Tables.nation(spark, d)).collect()
     assert(pr.length == 25)

@@ -134,7 +134,7 @@ class OperatorSpec extends SparkSpec {
       .collect()(0).getString(0)
     assert(user != null && user.nonEmpty, "current_user() must resolve")
     assert(user == System.getProperty("user.name"), s"session user $user")
-    val r = Relational.sessionProvenance(spark,
+    val r = Relational.sessionProvenance(
       Tables.orders(spark, sf("sf0.001"))).collect()(0)
     assert(r.getLong(0) == 1L, "user_ok")
     assert(r.getLong(1) == "/users//images".length.toLong, "fixed mount shape")

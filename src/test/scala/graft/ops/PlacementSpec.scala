@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions._
 
 /** Laws for placement/coverage audits: the HRW minimal-movement
   * property and interval-union accounting on a hand geometry.

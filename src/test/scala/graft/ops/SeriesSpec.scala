@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions._
 
 /** Laws for the round-8 series/distribution diagnostics: runs-test
   * extremes on planted alternating/blocked series, renewal invariants,

@@ -138,7 +138,7 @@ class StatsSpec extends SparkSpec {
 
   test("cmsHeavyParts equals the plain GROUP BY + HAVING twin (screen is lossless)") {
     val li = Tables.lineitem(spark, sf("sf0.001"))
-    val got = Scale.cmsHeavyParts(spark, li).collect()
+    val got = Scale.cmsHeavyParts(li).collect()
       .map(r => r.getAs[Long]("l_partkey") -> r.getAs[Long]("n_items")).toMap
     val total = li.count()
     val thr = math.max(1L, math.ceil(total * 0.0001).toLong)

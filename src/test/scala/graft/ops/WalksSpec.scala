@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions._
 
 /** Laws for the sequential-walk operators: SPRT crossing semantics and
   * personalized-PageRank mass/locality.

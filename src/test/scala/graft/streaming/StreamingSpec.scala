@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
 
 /** Streaming operator tests: watermark windowing equivalence with the
   * batch plan, the flatMapGroupsWithState session machine driven as a

@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions._
 
 /** Laws for the round-8 corpus-forensics operators: MATTR bounds and
   * its repeated-token degenerate case, Gries DP range and its

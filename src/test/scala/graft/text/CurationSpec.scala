@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions._
 
 /** Curation-operator invariants (q86 repetition audit, q87 PII scrub) on
   * hand-computed fixtures plus corpus-wide bounds — the oracle pins exact
@@ -25,7 +24,6 @@ class CurationSpec extends SparkSpec {
 
   test("decontamination flags a planted train/eval overlap") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // doc 97 is the eval member (id % 97 = 0); doc 1 shares both of its
     // 4-gram shingles, doc 2 shares none, doc 3 shares the first only
     val docs = Seq(

@@ -71,7 +71,7 @@ class PassJoinSpec extends SparkSpec {
     assert(got == want, s"extra pairs: ${(got -- want).take(5)}")
     // the fixture must actually exercise both families
     assert(want.exists { case (a, b, _) => b == a + 600L }, "no shift pair fired")
-    assert(want.exists { case (a, b, d) => d == 12 }, "no on-threshold pair fired")
+    assert(want.exists { case (_, _, d) => d == 12 }, "no on-threshold pair fired")
     assert(got.exists { case (a, b, _) => a == 950L && b == 951L }, "short path lost its pair")
   }
 }

@@ -18,13 +18,13 @@ class RepresentSpec extends SparkSpec {
       val h = Seq.tabulate(32)(d => ((i * 31 + d * 7) % 13).toFloat / 13f)
       (i, h ++ h)
     }
-    val r = Represent.linearCka(spark, emb(rows)).collect()(0)
+    val r = Represent.linearCka(emb(rows)).collect()(0)
     assert(math.abs(r.getAs[Double]("cka") - 1.0) < 1e-4,
       s"self-aligned CKA: ${r.getAs[Double]("cka")}")
   }
 
   test("linearCka on the corpus is in [0, 1]") {
-    val r = Represent.linearCka(spark,
+    val r = Represent.linearCka(
       graft.Tables.embeddings(spark, sf("sf0.001"))).collect()(0)
     val cka = r.getAs[Double]("cka")
     assert(cka >= 0.0 && cka <= 1.0 + 1e-9, s"CKA out of range: $cka")
