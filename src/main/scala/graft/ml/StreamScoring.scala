@@ -1,11 +1,10 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.LogisticRegressionModel
+import org.apache.spark.ml.classification.{DriverLogisticRegression, LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
 import graft.imaging.ImageUdfs
 
 /** Entry point C (SURVEY.md §3.3): streaming inference. The binaryFile
@@ -31,20 +30,18 @@ object StreamScoring {
         array(col("statistics.entropy")))))
 
   /** Train the scoring head on labeled images (`statistics`, `label`).
-    * LR reads its input twice (summarizer, then its cached blocks), so the
-    * 7-feature training frame is persisted for the fit and dropped after
-    * it (03a_Model Training.py:125-126), and `coalesce(1)` makes each LR
-    * iteration one task instead of a per-file task wave.
+    * The 7-feature training frame is collected in one Spark job and
+    * fitted on the driver by `DriverLogisticRegression`, whose model
+    * equals MLlib's fit over one partition bit for bit (03a_Model
+    * Training.py:210-233); MLlib's own fit runs one Spark job per L-BFGS
+    * loss evaluation.
     */
-  def trainOnImages(spark: SparkSession, labeled: DataFrame): LogisticRegressionModel = {
-    val feats = imageFeatures(spark, labeled)
-      .select(col("features"), col("label").cast("double").as("y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try new org.apache.spark.ml.classification.LogisticRegression()
-      .setFeaturesCol("features").setLabelCol("y").setMaxIter(50)
-      .fit(feats.coalesce(1))
-    finally feats.unpersist(blocking = false)
-  }
+  def trainOnImages(spark: SparkSession, labeled: DataFrame): LogisticRegressionModel =
+    DriverLogisticRegression.fit(
+      new LogisticRegression()
+        .setFeaturesCol("features").setLabelCol("y").setMaxIter(50),
+      imageFeatures(spark, labeled)
+        .select(col("features"), col("label").cast("double").as("y")))
 
   /** U3/S5: streaming scoring into the (path, score) parquet sink. */
   def scoreStream(spark: SparkSession, model: LogisticRegressionModel,

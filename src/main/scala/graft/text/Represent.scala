@@ -153,7 +153,7 @@ object Represent extends QueryModule {
         (col("s").cast("double") / col("cnt").cast("double")).as("cv"))
       .orderBy("d0")
       .collect().map(_.getAs[Double]("cv"))
-    val centArr = array(cent.map(lit(_)): _*)
+    val centArr = array(cent.toIndexedSeq.map(lit(_)): _*)
     val rel = base
       .withColumn("cemb", centArr)
       .select(col("vec_id"), col("embedding"),

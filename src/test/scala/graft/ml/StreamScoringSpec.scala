@@ -3,7 +3,9 @@ package graft.ml
 import graft.SparkSpec
 import graft.imaging.{ImageQueries, ImageUdfs}
 import graft.ingest.Ingest
+import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.scheduler.SparkListenerStageCompleted
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -56,6 +58,42 @@ class StreamScoringSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     StreamScoring.trainOnImages(spark, spark.read.parquet(sink))
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("trainOnImages starts at most two Spark jobs") {
+    val sinkDf = spark.read.parquet(sink)
+    val jobs = jobsDuring(StreamScoring.trainOnImages(spark, sinkDf))
+    assert(jobs.size <= 2, s"${jobs.size} jobs")
+  }
+
+  /** MLlib's own fit of the scoring head, over one partition. */
+  private def mllibFit(labeled: DataFrame): LogisticRegressionModel =
+    new LogisticRegression().setLabelCol("y").setMaxIter(50)
+      .fit(StreamScoring.imageFeatures(spark, labeled)
+        .select(col("features"), col("label").cast("double").as("y")).coalesce(1))
+
+  private def assertSameBits(a: LogisticRegressionModel, b: LogisticRegressionModel): Unit = {
+    def bits(m: LogisticRegressionModel) =
+      (m.coefficients.toArray :+ m.intercept).map(java.lang.Double.doubleToRawLongBits).toSeq
+    assert(bits(a) == bits(b), s"${a.coefficients} ${a.intercept} vs ${b.coefficients} ${b.intercept}")
+  }
+
+  test("the driver fit equals MLlib's one-partition fit bit for bit") {
+    val sinkDf = spark.read.parquet(sink).select("statistics", "label")
+    val batch = Ingest.batch(spark, ImageQueries.sharedCorpusDir.toString)
+      .select("statistics", "label")
+    for ((labeled, rows) <- Seq(sinkDf -> corpusSize, batch -> corpusSize,
+        sinkDf.union(batch) -> 2 * corpusSize)) {
+      assert(labeled.count() == rows)
+      assertSameBits(StreamScoring.trainOnImages(spark, labeled), mllibFit(labeled))
+    }
+  }
+
+  test("trainOnImages fails on a one-class training set") {
+    val oneClass = spark.read.parquet(sink).select("statistics", "label")
+      .filter(col("label") === 1)
+    val e = intercept[IllegalArgumentException](StreamScoring.trainOnImages(spark, oneClass))
+    assert(e.getMessage.contains("two label classes"))
   }
 
   test("imageFeatures over the ingest sink does not read the JPEG bytes") {

@@ -341,7 +341,7 @@ class LayoutAnalyticsSpec extends SparkSpec {
     assert(a.toSeq == b.toSeq)
     // ES keys ~ Exp(w): the length-weighted sample's mean length should
     // exceed the corpus mean materially
-    val sampleMean = docs.filter(col("doc_id").isin(a: _*))
+    val sampleMean = docs.filter(col("doc_id").isin(a.toIndexedSeq: _*))
       .agg(avg("n_chars")).collect()(0).getDouble(0)
     val corpusMean = docs.agg(avg("n_chars")).collect()(0).getDouble(0)
     assert(sampleMean > corpusMean, s"sample $sampleMean <= corpus $corpusMean")
