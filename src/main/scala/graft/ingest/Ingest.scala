@@ -61,6 +61,7 @@ object Ingest {
   def stream(spark: SparkSession, srcDir: String, outDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 0,
       maxBytesPerTrigger: Long = 0L): StreamingQuery = {
+    graft.LocalFs.install(spark)
     val admission: Long =
       if (maxBytesPerTrigger > 0) maxBytesPerTrigger
       else spark.sparkContext.defaultParallelism * 512L * 1024 * 1024

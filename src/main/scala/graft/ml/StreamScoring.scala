@@ -46,6 +46,7 @@ object StreamScoring {
   /** U3/S5: streaming scoring into the (path, score) parquet sink. */
   def scoreStream(spark: SparkSession, model: LogisticRegressionModel,
       srcDir: String, outDir: String, checkpointDir: String): StreamingQuery = {
+    graft.LocalFs.install(spark)
     ImageUdfs.register(spark)
     val src = spark.readStream
       .format("binaryFile")

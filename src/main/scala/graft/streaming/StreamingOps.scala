@@ -70,7 +70,8 @@ object StreamingOps extends QueryModule {
       stream: => DataFrame, mode: OutputMode = OutputMode.Append(),
       finals: Boolean = false, guard: Option[Batches] = None,
       eachBatch: Option[String => (DataFrame, Long) => Unit] = None)(
-      readBack: String => DataFrame): DataFrame =
+      readBack: String => DataFrame): DataFrame = {
+    graft.LocalFs.install(spark)
     ConfWindow.withConf(spark, "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.noDataMicroBatches.enabled" -> finals.toString) {
       graft.Tmp.withDir(s"graft_ck_$label") { ck =>
@@ -92,6 +93,7 @@ object StreamingOps extends QueryModule {
         } finally if (eachBatch.isEmpty) spark.catalog.dropTempView(sink)
       }
     }
+  }
 
   /** Per-event-type count and exact value total. */
   private def typeTotals(df: DataFrame): DataFrame = df.groupBy("event_type")
