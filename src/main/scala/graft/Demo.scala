@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -14,18 +13,10 @@ import java.nio.file.Files
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     // 01_Configuration: paths
-    val root   = Files.createTempDirectory("graft_demo")
+    val root   = Tmp.dir("graft_demo")
     val src    = Files.createDirectory(root.resolve("raw"))
     val images = root.resolve("images").toString
     val scored = root.resolve("scored").toString

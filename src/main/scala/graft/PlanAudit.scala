@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow, Sort => LSort, Aggregate => LAggregate, GlobalLimit => LGlobalLimit, LocalLimit => LLocalLimit, LocalRelation => LLocalRelation, LogicalPlan, Join => LJoin}
 
 /** Surface-wide scale-hazard audit: plans every registered query (table
@@ -18,11 +18,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow, Sort => L
   *
   * Whitelisted query/hazard pairs are documented inline — each names the
   * reason the shape is bounded (e.g. the windowed frame is a ≤1000-row
-  * aggregate, not the corpus). The CLI exits non-zero on any unexplained
-  * hazard; `PlanAuditSpec` runs [[audit]] over the full registry inside
+  * aggregate, not the corpus). `Inspect audit` exits non-zero on any
+  * unexplained hazard; `PlanAuditSpec` runs [[audit]] over the full registry inside
   * `sbt test`, so a flat-window regression fails CI.
   *
-  * usage: runMain graft.PlanAudit <sfDir> [queryName ...]
+  * usage: runMain graft.Inspect audit <sfDir> [queryName ...]
   */
 object PlanAudit {
 
@@ -241,43 +241,4 @@ object PlanAudit {
   def unexplained(name: String, a: Audit): Seq[String] =
     a.hazards.filterNot(h =>
       whitelist.getOrElse(name, Set.empty).exists(h.startsWith))
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.autoBroadcastJoinThreshold", (10L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sfDir = args(0)
-    val names =
-      if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-
-    var flagged = 0
-    var planned = 0
-    names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        if (df.isStreaming) {
-          // streaming plans are finalized per-microbatch; static audit n/a
-        } else {
-          planned += 1
-          val a = audit(df)
-          a.infos.foreach(i => println(s"INFO $name: $i"))
-          val un = unexplained(name, a)
-          if (un.nonEmpty) {
-            flagged += 1
-            println(s"FLAG $name: ${un.mkString(", ")}")
-          }
-        }
-      } catch {
-        case e: Exception =>
-          println(s"PLAN-ERR $name: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.toSeq.headOption.getOrElse("")}")
-      }
-    }
-    println(s"\naudited $planned plans, $flagged flagged")
-    spark.stop()
-    if (flagged > 0) sys.exit(1)
-  }
 }

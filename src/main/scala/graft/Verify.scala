@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,18 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet // optional query-name filter for local iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // default INT96 timestamps on purpose: pandas reads them tz-NAIVE
-      // (like DuckDB's output); TIMESTAMP_MICROS would read tz-aware and
-      // break naive-vs-aware value comparison in the driver's oracle diff
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
+    // default INT96 timestamps on purpose: pandas reads them tz-NAIVE
+    // (like DuckDB's output); TIMESTAMP_MICROS would read tz-aware and
+    // break naive-vs-aware value comparison in the driver's oracle diff
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

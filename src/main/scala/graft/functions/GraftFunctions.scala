@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** SQL registration for the engine's custom Catalyst expressions, both as
-  * a `SparkSessionExtensions` injector (builder-time,
-  * `.withExtensions(new GraftExtensions)`) and as a runtime registrar for
-  * already-built sessions. After registration the names work inside any
+/** SQL registration for the engine's custom Catalyst expressions into an
+  * already-built session. After registration the names work inside any
   * `expr("...")` / `spark.sql("...")` string.
   */
 object GraftFunctions {
@@ -33,31 +31,5 @@ object GraftFunctions {
     reg.createOrReplaceTempFunction("vec_sum",
       (es: Seq[Expression]) => { val a = arity("vec_sum", 1)(es); VectorSumAgg(a.head).toAggregateExpression() },
       "scala_udf")
-  }
-}
-
-/** Builder-time injection:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (es: Seq[Expression]) => {
-        val a = GraftFunctions.arity("cosine_sim", 2)(es); CosineSimilarity(a(0), a(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("vec_sum"),
-      new ExpressionInfo(classOf[VectorSumAgg].getName, "vec_sum"),
-      (es: Seq[Expression]) => {
-        val a = GraftFunctions.arity("vec_sum", 1)(es); VectorSumAgg(a.head).toAggregateExpression()
-      }))
-    // whole-operator surface: the native AS-OF join planner strategy
-    // (the asofLookup DSL also self-registers on already-built sessions
-    // via experimental.extraStrategies — this is the builder-time path)
-    e.injectPlannerStrategy(_ => graft.plans.AsofStrategy)
   }
 }

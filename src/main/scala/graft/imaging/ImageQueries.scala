@@ -40,14 +40,11 @@ object ImageQueries extends QueryModule {
   /** One JPEG-encoded corpus per JVM: regenerating 24 encodes per query
     * invocation would bill image ENCODING to every benchmark pass and
     * leak a temp directory each run. The corpus is read-only, so sharing
-    * across queries is safe; files are removed at JVM exit.
+    * across queries is safe; `Tmp` removes it at JVM exit.
     */
   lazy val sharedCorpusDir: Path = {
-    val dir = Files.createTempDirectory("graft_images")
+    val dir = graft.Tmp.dir("graft_images")
     writeCorpus(dir)
-    dir.toFile.deleteOnExit()
-    val listing = Files.list(dir)
-    try listing.forEach(p => p.toFile.deleteOnExit()) finally listing.close()
     dir
   }
 

@@ -471,7 +471,7 @@ object Analytics extends QueryModule {
     // — checkpoint both so the corpus aggregation runs ONCE, not 3×
     // (the un-checkpointed plan re-aggregated lineitem per consumer).
     // localCheckpoint() is EAGER: merely constructing this frame runs
-    // two Spark jobs (plan-only consumers — Plan/PlanAudit/PlanSpec —
+    // two Spark jobs (plan-only consumers — PlanAudit/PlanSpec —
     // pay them too; eager is kept deliberately so the two downstream
     // consumers can never race to compute an unmaterialized checkpoint
     // twice), and the blocks are non-reliable (executor loss cannot

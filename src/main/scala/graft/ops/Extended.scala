@@ -894,13 +894,11 @@ object Extended extends QueryModule {
   private val textDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def textCopiesDir(spark: SparkSession, sfDir: String): String =
     textDirs.computeIfAbsent(sfDir, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_events_text")
+      val dir = graft.Tmp.dir("graft_events_text")
       val base = events(spark, sfDir)
         .select("event_id", "user_id", "event_type", "value")
       base.write.mode("overwrite").json(s"$dir/json")
       base.write.mode("overwrite").option("header", "true").csv(s"$dir/csv")
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.forEach(p => p.toFile.deleteOnExit()) finally walk.close()
       dir.toString
     })
 
@@ -960,15 +958,13 @@ object Extended extends QueryModule {
   private val orcTextDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def orcTextDir(spark: SparkSession, sfDir: String): String =
     orcTextDirs.computeIfAbsent(sfDir, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_docs_orctext")
+      val dir = graft.Tmp.dir("graft_docs_orctext")
       val docs = documents(spark, sfDir)
       docs.select("doc_id", "lang", "source", "n_chars")
         .write.mode("overwrite").orc(s"$dir/orc")
       // documents.text is newline-free by construction (FIXTURES.md), so
       // one line per document survives the text round-trip losslessly
       docs.select("text").write.mode("overwrite").text(s"$dir/text")
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.forEach(p => p.toFile.deleteOnExit()) finally walk.close()
       dir.toString
     })
 
@@ -1002,7 +998,7 @@ object Extended extends QueryModule {
   private val schemaEvoDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def schemaEvoDir(spark: SparkSession, sfDir: String): String =
     schemaEvoDirs.computeIfAbsent(sfDir, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_orders_evo")
+      val dir = graft.Tmp.dir("graft_orders_evo")
       val o = orders(spark, sfDir)
       o.filter(pmod(col("o_orderkey"), lit(2L)) === 0)
         .select("o_orderkey", "o_totalprice") // generation 1: narrow schema
@@ -1010,8 +1006,6 @@ object Extended extends QueryModule {
       o.filter(pmod(col("o_orderkey"), lit(2L)) === 1)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .write.mode("overwrite").parquet(s"$dir/gen=2")
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.forEach(p => p.toFile.deleteOnExit()) finally walk.close()
       dir.toString
     })
 
@@ -1234,12 +1228,10 @@ object Extended extends QueryModule {
   private val xmlDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def xmlFixtureDir(spark: SparkSession, sfDir: String): String =
     xmlDirs.computeIfAbsent(sfDir, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_docs_xml").toString
+      val dir = graft.Tmp.dir("graft_docs_xml").toString
       documents(spark, sfDir).select("doc_id", "lang", "source", "n_chars")
         .write.mode("overwrite").format("xml")
         .option("rowTag", "doc").option("rootTag", "docs").save(dir)
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try walk.forEach(p => p.toFile.deleteOnExit()) finally walk.close()
       dir
     })
 
@@ -1340,7 +1332,7 @@ object Extended extends QueryModule {
   private val csvDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def csvDir(spark: SparkSession, sfDir: String): String =
     csvDirs.computeIfAbsent(sfDir, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_docs_csv")
+      val dir = graft.Tmp.dir("graft_docs_csv")
       documents(spark, sfDir).select("doc_id", "lang", "n_chars")
         .write.mode("overwrite").option("header", "false")
         .csv(s"$dir/csv")
@@ -1351,8 +1343,6 @@ object Extended extends QueryModule {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/csv/part-corrupt.csv"),
         bad.mkString("\n").getBytes("UTF-8"))
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.forEach(p => p.toFile.deleteOnExit()) finally walk.close()
       s"$dir/csv"
     })
 

@@ -273,13 +273,11 @@ object Layout extends QueryModule {
   private val timeTravelDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def timeTravelDir(spark: SparkSession, sfDir: String): String =
     timeTravelDirs.computeIfAbsent(sfDir, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_time_travel")
+      val dir = graft.Tmp.dir("graft_time_travel")
       val o = orders(spark, sfDir)
       o.filter(col("o_orderstatus") === "O").write.mode("overwrite").parquet(s"$dir/f_open")
       o.filter(col("o_orderstatus") === "F").write.mode("overwrite").parquet(s"$dir/f_filled")
       o.filter(col("o_orderstatus") === "P").write.mode("overwrite").parquet(s"$dir/f_pending")
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.forEach(p => p.toFile.deleteOnExit()) finally walk.close()
       dir.toString
     })
 

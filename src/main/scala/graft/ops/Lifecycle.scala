@@ -193,7 +193,7 @@ object Lifecycle extends QueryModule {
   /** The cascade plan itself (see [[forgetCascade]] for the
     * constraint-propagation execution window it must run under).
     */
-  private[graft] def forgetCascadePlan(customer: DataFrame, orders: DataFrame,
+  private def forgetCascadePlan(customer: DataFrame, orders: DataFrame,
       lineitem: DataFrame, events: DataFrame): DataFrame = {
     // the request manifest is |customer|/20 keys — reused by three
     // semi-joins, so compute the md5-fold once

@@ -134,19 +134,16 @@ object Scale extends QueryModule {
   }
 
   /** One partitioned copy of events per sfDir (fixture setup, cached for
-    * the session; cleaned up on JVM exit — parents registered before the
-    * walked children so LIFO deletion empties directories first).
+    * the session; `Tmp` removes it at JVM exit).
     */
   private val partDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def partitionedEventsDir(spark: SparkSession, sfDir: String): String =
     partDirs.computeIfAbsent(sfDir, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_events_bydate")
+      val dir = graft.Tmp.dir("graft_events_bydate")
       graft.Tables.events(spark, sfDir)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date")
         .parquet(dir.toString)
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.forEach(p => p.toFile.deleteOnExit()) finally walk.close()
       dir.toString
     })
 
@@ -219,7 +216,7 @@ object Scale extends QueryModule {
     bktTables.computeIfAbsent(sfDir, _ => {
       val tag = sfDir.replaceAll("[^0-9a-zA-Z]", "")
       val p = s"graft_bkt_$tag"
-      val dir = java.nio.file.Files.createTempDirectory("graft_bkt")
+      val dir = graft.Tmp.dir("graft_bkt")
       spark.sql(s"DROP TABLE IF EXISTS `${p}_o`")
       spark.sql(s"DROP TABLE IF EXISTS `${p}_l`")
       // pre-shuffle each table onto its bucket key with numPartitions =
@@ -236,8 +233,6 @@ object Scale extends QueryModule {
         .repartition(16, col("l_orderkey"))
         .write.mode("overwrite").option("path", s"$dir/l").bucketBy(16, "l_orderkey")
         .sortBy("l_orderkey").saveAsTable(s"${p}_l")
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.forEach(f => f.toFile.deleteOnExit()) finally walk.close()
       p
     })
 

@@ -65,13 +65,11 @@ final case class AsofLookupExec(
     // point-in-time dimension: bounded collect (executeTake stops pulling
     // partitions once the cap is exceeded, so an accidentally-huge right
     // side fails fast instead of OOMing the driver)
-    val maxRows = math.min(conf.getConfString(
-      "graft.asof.maxRightRows", "5000000").toLong, Int.MaxValue - 1L)
-    val taken = right.executeTake(maxRows.toInt + 1)
+    val maxRows = AsofLookup.MaxRightRows
+    val taken = right.executeTake(maxRows + 1)
     require(taken.length <= maxRows,
       s"AsofLookup right side exceeds $maxRows rows; the operator " +
-        "broadcasts the full dimension. Shrink it (pre-aggregate eras) " +
-        "or raise graft.asof.maxRightRows.")
+        "broadcasts the full dimension. Shrink it (pre-aggregate eras).")
     // drop null-keyed eras; sort by (key, row bytes): with duplicate
     // rightOn keys the byte-wise secondary sort makes the surviving era
     // (the LAST in sort order) identical across partitionings/arrival
@@ -122,6 +120,11 @@ final case class AsofLookupExec(
 }
 
 object AsofLookup {
+  /** The most dimension rows the operator broadcasts; a larger dimension
+    * takes the distributed merge.
+    */
+  private[plans] val MaxRightRows = 5000000
+
   /** Unsigned byte-wise lexicographic compare (shorter prefix first) —
     * the deterministic secondary sort key for duplicate-key eras.
     */
@@ -137,15 +140,20 @@ object AsofLookup {
   }
 
   /** DataFrame-level entry: `asofLookup(facts, dim, on, dimOn)`.
-    * Registers the planner strategy on the session once. The check
-    * inspects the session planner's FULL strategy list (which includes
-    * the copy GraftExtensions injects at builder time), so a session
-    * built withExtensions never gets a second registration; the
-    * check-then-append is synchronized so concurrent first calls on a
-    * bare session cannot race a registration away.
+    * Registers the planner strategy in the session's
+    * `experimental.extraStrategies` once; the check-then-append is
+    * synchronized so concurrent first calls on a bare session cannot
+    * race a registration away.
     */
   def asofLookup(leftDf: DataFrame, rightDf: DataFrame,
-      leftOn: Column, rightOn: Column): DataFrame = {
+      leftOn: Column, rightOn: Column): DataFrame =
+    asofLookup(leftDf, rightDf, leftOn, rightOn, MaxRightRows)
+
+  /** The entry with an explicit broadcast cap: a dimension of more than
+    * `cap` rows takes the merge. Tests lower it to reach that path.
+    */
+  private[graft] def asofLookup(leftDf: DataFrame, rightDf: DataFrame,
+      leftOn: Column, rightOn: Column, cap: Int): DataFrame = {
     val spark = leftDf.sparkSession
     // graceful degradation: a dimension too big to broadcast routes to
     // the distributed range-partitioned merge ([[AsofMerge]]) instead of
@@ -153,15 +161,10 @@ object AsofLookup {
     // at cap+1 rows, so the planning-time count never materializes an
     // oversized dimension. doExecute keeps its own fail-fast require as
     // the safety net for directly-constructed plans.
-    val cap = math.min(spark.conf.get(
-      "graft.asof.maxRightRows", "5000000").toLong, Int.MaxValue - 1L).toInt
     if (rightDf.limit(cap + 1).count() > cap)
       return AsofMerge.asofMergeJoin(leftDf, rightDf, leftOn, rightOn)
     AsofLookup.synchronized {
-      val registered =
-        spark.sessionState.planner.strategies.contains(AsofStrategy) ||
-          spark.experimental.extraStrategies.contains(AsofStrategy)
-      if (!registered) {
+      if (!spark.experimental.extraStrategies.contains(AsofStrategy)) {
         spark.experimental.extraStrategies =
           spark.experimental.extraStrategies :+ AsofStrategy
       }

@@ -97,13 +97,10 @@ object Geometry extends QueryModule {
       .orderBy("round")
   }
 
-  /** One greedy round's distance pass (min over the selected seeds,
-    * inlined as float-array literals) — shared by the [[kcenterSeeds]]
-    * loop and the Plan evidence tool, which prints this frame's plan
-    * (the query's own final frame is the driver-local pick list, so its
-    * plan carries no evidence of the per-round corpus pass).
+  /** One greedy round's distance pass of [[kcenterSeeds]] (min over the
+    * selected seeds, inlined as float-array literals).
     */
-  private[graft] def kcenterRoundFrame(emb: DataFrame, selected: Seq[Long],
+  private def kcenterRoundFrame(emb: DataFrame, selected: Seq[Long],
       seedVecs: Seq[Seq[Float]]): DataFrame = {
     import graft.functions.QuantizedSqDist.quantized_sq_dist
     val minD2 = seedVecs

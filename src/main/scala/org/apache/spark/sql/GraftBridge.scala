@@ -20,4 +20,10 @@ object GraftBridge {
   def logicalPlan(df: DataFrame):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** Block until every listener has seen every event posted so far (the
+    * listener bus delivers asynchronously).
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

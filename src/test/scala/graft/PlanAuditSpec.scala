@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** CI gate for the surface-wide scale-hazard audit (SURVEY.md §4): a
   * future corpus-wide global window / mid-plan global sort / cartesian
   * product regression on ANY registered query fails `sbt test`, not just
-  * the standalone `runMain graft.PlanAudit`.
+  * the standalone `runMain graft.Inspect audit`.
   */
 class PlanAuditSpec extends SparkSpec {
 

@@ -463,23 +463,17 @@ class LayoutAnalyticsSpec extends SparkSpec {
     val native = AsofLookup.asofLookup(facts, dim, col("t"), col("eff"))
       .collect().map(_.toSeq).sortBy(_.toString)
     // force the fallback: cap below |dim|
-    spark.conf.set("graft.asof.maxRightRows", "10")
-    try {
-      val degraded = AsofLookup.asofLookup(facts, dim, col("t"), col("eff"))
-        .collect().map(_.toSeq).sortBy(_.toString)
-      assert(degraded.toSeq == native.toSeq,
-        "fallback path must be output-identical to the native operator")
-    } finally spark.conf.unset("graft.asof.maxRightRows")
+    val degraded = AsofLookup.asofLookup(facts, dim, col("t"), col("eff"), 10)
+      .collect().map(_.toSeq).sortBy(_.toString)
+    assert(degraded.toSeq == native.toSeq,
+      "fallback path must be output-identical to the native operator")
     // exact cap boundary: cap == |dim| must STAY on the native broadcast
     // path (the guard is strictly-greater), cap == |dim|-1 must degrade —
     // both output-identical
     def planOf(cap: Int): (String, Seq[Seq[Any]]) = {
-      spark.conf.set("graft.asof.maxRightRows", cap.toString)
-      try {
-        val df = AsofLookup.asofLookup(facts, dim, col("t"), col("eff"))
-        (df.queryExecution.executedPlan.treeString,
-          df.collect().map(_.toSeq).sortBy(_.toString).toSeq)
-      } finally spark.conf.unset("graft.asof.maxRightRows")
+      val df = AsofLookup.asofLookup(facts, dim, col("t"), col("eff"), cap)
+      (df.queryExecution.executedPlan.treeString,
+        df.collect().map(_.toSeq).sortBy(_.toString).toSeq)
     }
     val (atCapPlan, atCapRows) = planOf(40)
     assert(atCapPlan.contains("AsofLookup"),

@@ -85,18 +85,4 @@ class ScaleSpec extends SparkSpec {
       .collect()
     assert(vs.nonEmpty && vs.forall(_.getSeq[Double](1).length == 64))
   }
-
-  test("builder-time extensions inject the functions") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    try {
-      val r = s2.sql("select cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) as c").collect()
-      assert(math.abs(r(0).getDouble(0) - 1.0) < 1e-12)
-    } finally { /* shared-JVM session: do not stop the underlying context */ }
-  }
 }
