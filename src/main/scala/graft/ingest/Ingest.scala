@@ -61,7 +61,6 @@ object Ingest {
   def stream(spark: SparkSession, srcDir: String, outDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 0,
       maxBytesPerTrigger: Long = 0L): StreamingQuery = {
-    graft.LocalFs.install(spark)
     val admission: Long =
       if (maxBytesPerTrigger > 0) maxBytesPerTrigger
       else spark.sparkContext.defaultParallelism * 512L * 1024 * 1024
@@ -74,13 +73,13 @@ object Ingest {
         reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
       else reader.option("maxBytesPerTrigger", admission))
       .load(srcDir)
-    enrich(spark, src).writeStream
+    val w = enrich(spark, src).writeStream
       .format("parquet")
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .partitionBy("date")
       .trigger(Trigger.AvailableNow())
-      .start(outDir)
+    graft.Streams.start(spark)(w.start(outDir))
   }
 
   /** Batch variant of the same plan (tests + the demo query). */

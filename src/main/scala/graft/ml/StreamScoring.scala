@@ -46,7 +46,6 @@ object StreamScoring {
   /** U3/S5: streaming scoring into the (path, score) parquet sink. */
   def scoreStream(spark: SparkSession, model: LogisticRegressionModel,
       srcDir: String, outDir: String, checkpointDir: String): StreamingQuery = {
-    graft.LocalFs.install(spark)
     ImageUdfs.register(spark)
     val src = spark.readStream
       .format("binaryFile")
@@ -58,11 +57,11 @@ object StreamScoring {
     val scored = model.transform(imageFeatures(spark, src))
       .select(col("path"),
         element_at(vector_to_array(col("probability")), 2).as("score"))
-    scored.writeStream
+    val w = scored.writeStream
       .format("parquet")
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start(outDir)
+    graft.Streams.start(spark)(w.start(outDir))
   }
 }

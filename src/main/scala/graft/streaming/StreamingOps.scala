@@ -71,7 +71,6 @@ object StreamingOps extends QueryModule {
       finals: Boolean = false, guard: Option[Batches] = None,
       eachBatch: Option[String => (DataFrame, Long) => Unit] = None)(
       readBack: String => DataFrame): DataFrame = {
-    graft.LocalFs.install(spark)
     ConfWindow.withConf(spark, "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.noDataMicroBatches.enabled" -> finals.toString) {
       graft.Tmp.withDir(s"graft_ck_$label") { ck =>
@@ -79,11 +78,11 @@ object StreamingOps extends QueryModule {
           eachBatch.fold(s"graft_${label}_${System.nanoTime()}")(_ => s"$ck/sink")
         try {
           val w = stream.writeStream.outputMode(mode)
-          val q = eachBatch
+          val q = graft.Streams.start(spark)(eachBatch
             .fold(w.format("memory").queryName(sink))(f => w.foreachBatch(f(sink)))
             .option("checkpointLocation", ck)
             .trigger(Trigger.AvailableNow())
-            .start()
+            .start())
           q.awaitTermination()
           guard.foreach { g =>
             val n = q.recentProgress.count(_.numInputRows > 0)

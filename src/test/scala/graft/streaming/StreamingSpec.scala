@@ -124,7 +124,8 @@ class StreamingSpec extends SparkSpec {
 
   private val runnerConfs = Seq("spark.sql.shuffle.partitions",
     "spark.sql.streaming.noDataMicroBatches.enabled",
-    "spark.sql.streaming.stateStore.providerClass")
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.artifact.isolation.enabled")
 
   /** A fresh SQL session with a non-default shuffle-partition count. */
   private def freshSession(): org.apache.spark.sql.SparkSession = {
@@ -132,8 +133,10 @@ class StreamingSpec extends SparkSpec {
     s.conf.set("spark.sql.shuffle.partitions", "3")
     s
   }
+  /** Each runner key's explicitly set value: `None` when it is unset
+    * (`conf.getOption` would answer a registered key's default). */
   private def confs(s: org.apache.spark.sql.SparkSession) =
-    runnerConfs.map(s.conf.getOption)
+    runnerConfs.map(s.conf.getAll.get)
   private def sinkViews(s: org.apache.spark.sql.SparkSession) =
     s.catalog.listTables().collect().toSeq
       .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name)
@@ -141,6 +144,7 @@ class StreamingSpec extends SparkSpec {
   test("every stream query leaves the session as found") {
     val s = freshSession()
     val before = confs(s)
+    assert(!s.conf.getAll.contains("spark.sql.artifact.isolation.enabled"))
     val liveBefore = graft.Tmp.live.toArray.toSet
     StreamingOps.queries.foreach(q => assert(q.run(s, sf("sf0.001")).count() > 0, q.name))
     assert(sinkViews(s).isEmpty, "memory-sink views left behind")

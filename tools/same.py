@@ -4,7 +4,8 @@ the same columns in the same order, the same dtypes and the same multiset
 of rows (compared as strings, as the driver hashes them), plus a
 byte-identical oracle_sql.json. Per-run temp dir names in string values
 (q51's sink paths, e.g. /dev/shm/q51_out18363995713519980692/...) are
-masked first.
+masked first, together with the base dir they sit in, so the same fixture
+under /tmp and under /dev/shm compares equal.
 
 Usage: python3 tools/same.py <verifyDirA> <verifyDirB> [query ...]
 (no query names: every query present in either dir). Exits 1 on any
@@ -16,8 +17,13 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from check import canon
 
-# a path component's random suffix: createTempDirectory appends >= 10 digits
-TEMP_SUFFIX = re.compile(r"(/[A-Za-z_][\w.-]*?)\d{10,}")
+# a temp dir, base included: createTempDirectory appends >= 10 digits
+TEMP_DIR = re.compile(r"(?:/[\w.-]+)*?/([A-Za-z_][\w.-]*?)\d{10,}")
+
+
+def mask(v):
+    """`v` with each temp dir path ending in its name prefix and `#`."""
+    return TEMP_DIR.sub(r"<tmp>/\1#", v)
 
 
 def load(out_dir, name):
@@ -28,7 +34,7 @@ def load(out_dir, name):
 
 
 def as_strings(df):
-    return df.apply(lambda c: c.astype(str).map(lambda v: TEMP_SUFFIX.sub(r"\1#", v)))
+    return df.apply(lambda c: c.astype(str).map(mask))
 
 
 def differ(a, b):
